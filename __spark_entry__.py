@@ -560,7 +560,7 @@ def _q_pruned_scan_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     # grouped=True routes the predicate through the group-wise window
     # prune on the decode exchange — the semi-join's broadcast build
     # side re-executed the entire upstream encode (two full encode
-    # subtrees in the r5 plan, plans/r06/pruned_scan_agg_before.txt)
+    # subtrees in the plan; the window prune keeps a single one)
     decoded = decode_dataframe(
         chunks, arranged.schema, predicate=("o_orderkey", lo, hi), grouped=True
     )

@@ -3,18 +3,24 @@
 North-rule component: "per-partition checkpoint/lineage records in an
 Iceberg metadata table enabling resume after failure".  No Iceberg jars
 exist in this sandbox (SURVEY.md §7), so the catalog is emulated as a
-partitioned-parquet chunk store plus a lineage table whose schema
-matches an Iceberg snapshot/manifest row (snapshot_id, partition,
-file count, record_count, bytes, status, attempt, committed_at); the
+partitioned-parquet chunk store plus a lineage table whose rows match an
+Iceberg snapshot/manifest row (snapshot_id, partition, file count,
+record_count, bytes, status, attempt, committed_at, data files); the
 engine touches it only through this module, so a real Iceberg catalog
 could be dropped in behind the same calls.
 
 Determinism is the key design point: the partition id is a *content
 hash* — pmod(xxhash64(lang, repo, salt), num_parts) — not a task id,
 so a resumed job re-derives exactly the same partition → rows mapping
-and can skip completed partitions with a filter (an anti-join against
-the lineage table).  Orphan chunk directories from a crash between
-data write and lineage commit are detected and dropped on resume.
+and can skip the partitions its snapshot already committed.
+
+Commit protocol (Iceberg manifest semantics): data files are immutable
+and uniquely named, and a snapshot exists once its lineage commit file
+— which lists those files — is linked into ``lineage/`` (an ``os.link``
+compare-and-swap).  Readers open exactly the listed files, so a writer
+that crashed before its commit leaves only unlisted files that no reader
+sees; cleanup of such leftovers is housekeeping, never correctness.  The
+store is the union of all committed snapshots.
 """
 
 from __future__ import annotations
@@ -24,6 +30,8 @@ import os
 import shutil
 import time
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -34,17 +42,21 @@ class ConcurrentCommitError(RuntimeError):
     (two EncodeJobs racing on the same base_dir + snapshot_id)."""
 
 
-LINEAGE_COLUMNS = [
-    "snapshot_id",
-    "part_id",
-    "chunk_count",
-    "record_count",
-    "encoded_bytes",
-    "plain_bytes",
-    "status",
-    "attempt",
-    "committed_at",
-]
+LINEAGE_SCHEMA = pa.schema(
+    [
+        ("snapshot_id", pa.string()),
+        ("part_id", pa.int32()),
+        ("chunk_count", pa.int64()),
+        ("record_count", pa.int64()),
+        ("encoded_bytes", pa.int64()),
+        ("plain_bytes", pa.int64()),
+        ("status", pa.string()),
+        ("attempt", pa.int32()),
+        ("committed_at", pa.string()),
+        # the manifest: data files of this part, relative to chunks/
+        ("files", pa.list_(pa.string())),
+    ]
+)
 
 
 class EncodeJob:
@@ -52,7 +64,7 @@ class EncodeJob:
 
     Layout:
       base_dir/chunks/part_id=N/*.parquet   — encoded column chunks
-      base_dir/lineage/*.parquet            — commit records
+      base_dir/lineage/*.parquet            — commit records (manifests)
     """
 
     def __init__(
@@ -75,10 +87,10 @@ class EncodeJob:
         self.chunk_rows = chunk_rows
         self.snapshot_id = snapshot_id
         self.salt_target_rows = salt_target_rows
-        # minimum age before an UNCLAIMED staging dir / commit tmp is
-        # treated as a crash leftover rather than a live concurrent
-        # writer's workspace (ADVICE r5: unconditional cleanup deleted a
-        # live writer's staging mid-run)
+        # minimum age before a staging dir, commit tmp or unlisted chunk
+        # file is treated as a crash leftover rather than a live
+        # concurrent writer's workspace (ADVICE r5: unconditional
+        # cleanup deleted a live writer's staging mid-run)
         self.stale_staging_sec = stale_staging_sec
 
     # -------------------------------------------------- partition key
@@ -97,201 +109,114 @@ class EncodeJob:
             return None
         return spark.read.parquet(self.lineage_dir)
 
-    def completed_parts(self, spark: SparkSession) -> set[int]:
-        lin = self.lineage(spark)
-        if lin is None:
-            return set()
-        rows = (
-            lin.filter(F.col("status") == "committed")
-            .select("part_id")
-            .distinct()
-            .collect()
-        )
-        return {r["part_id"] for r in rows}
-
-    def _committed_parts_fs(self) -> set[int]:
-        """Driver-side (sparkless) read of committed part ids from the
-        lineage dir — used to re-check freshness immediately before a
-        destructive cleanup."""
-        import pyarrow.parquet as pq
-
-        if not os.path.isdir(self.lineage_dir) or not os.listdir(self.lineage_dir):
-            return set()
-        try:
-            tbl = pq.read_table(self.lineage_dir, columns=["part_id", "status"])
-        except Exception:  # noqa: BLE001 - unreadable catalog: claim nothing
-            return set()
-        d = tbl.to_pydict()
-        return {int(p) for p, s in zip(d["part_id"], d["status"]) if s == "committed"}
-
-    def _publish_staging(self, staging: str) -> None:
-        """Move a staging dir's part dirs into the chunk store.  Shared
-        by run() (after winning the commit CAS) and the resume-time
-        roll-forward of a claimed-but-unpublished attempt; racing
-        publishers tolerate dirs the other mover already took.
-
-        Race discipline (round-6 review): NEVER delete ``dst`` before
-        the claimed copy is in place — a racing roll-forward that
-        rmtree'd first could permanently delete the partition another
-        publisher had just placed (lineage would say committed, data
-        gone).  An occupied ``dst`` is moved ASIDE, the staged copy
-        moved in, and only then is the aside copy dropped; if a racer
-        took the staged copy first, the aside copy is restored."""
-        os.makedirs(self.chunks_dir, exist_ok=True)
-        try:
-            entries = os.listdir(staging)
-        except FileNotFoundError:  # pragma: no cover - racer finished the publish
-            return
-        for name in entries:
-            if not name.startswith("part_id="):
+    def _catalog(self) -> list[dict]:
+        """Every committed lineage row, read driver-side with pyarrow: a
+        catalog read is a metadata operation, not a Spark job.  A commit
+        without the ``files`` manifest predates the manifest layout and
+        is refused instead of being read as an empty or partial store."""
+        if not os.path.isdir(self.lineage_dir):
+            return []
+        rows: list[dict] = []
+        for name in sorted(os.listdir(self.lineage_dir)):
+            if name.startswith((".", "_")) or not name.endswith(".parquet"):
                 continue
-            src = os.path.join(staging, name)
-            dst = os.path.join(self.chunks_dir, name)
-            try:
-                os.replace(src, dst)
-                continue
-            except FileNotFoundError:  # pragma: no cover - racer took src
-                continue
-            except OSError:
-                pass  # dst exists (non-empty dir): take the aside path
-            aside = f"{dst}.aside-{os.getpid()}"
-            try:
-                os.replace(dst, aside)
-            except FileNotFoundError:  # pragma: no cover - dst vanished: retry plain
-                with contextlib.suppress(FileNotFoundError):
-                    os.replace(src, dst)
-                continue
-            try:
-                os.replace(src, dst)
-            except FileNotFoundError:  # pragma: no cover - racer placed it
-                os.replace(aside, dst)
-            else:
-                shutil.rmtree(aside, ignore_errors=True)
-        shutil.rmtree(staging, ignore_errors=True)
+            tbl = pq.read_table(os.path.join(self.lineage_dir, name))
+            if "files" not in tbl.column_names:
+                raise ValueError(
+                    f"chunk store {self.base_dir!r}: lineage commit {name} has no "
+                    "'files' manifest column (written before manifest commits); "
+                    "re-encode it into a new base_dir"
+                )
+            rows.extend(r for r in tbl.to_pylist() if r["status"] == "committed")
+        return rows
 
-    def _clean_orphans(self, completed: set[int]) -> list[int]:
-        """Resume-time repair (ADVICE r5 rework):
+    def _committed(self, catalog: list[dict]) -> set[int]:
+        """Part ids this job's snapshot has committed."""
+        return {r["part_id"] for r in catalog if r["snapshot_id"] == self.snapshot_id}
 
-        * staging dirs whose commit file EXISTS are a claimed attempt
-          that crashed mid-publish — roll the publish forward;
-        * unclaimed staging dirs / commit tmps are dropped only when
-          provably stale (older than ``stale_staging_sec``) — a fresh
-          one may belong to a live concurrent writer;
-        * chunk part dirs without committed lineage are crash orphans —
-          the committed set is re-read from the filesystem immediately
-          before deleting so a concurrently-landing commit is honored.
-        """
-        dropped = []
+    def _clean_orphans(self, listed: set[str]) -> list[int]:
+        """Resume-time housekeeping: drop staging dirs, commit tmps and
+        chunk files that no commit lists.  Each is dropped only when
+        older than ``stale_staging_sec`` — a fresh one may belong to a
+        live concurrent writer.  Readers open only listed files, so this
+        never changes what a reader sees.  Returns the part ids whose
+        unlisted files were dropped."""
         now = time.time()
 
-        def _newest_mtime(root: str) -> float:
-            """Newest mtime anywhere under ``root`` — a live writer may
-            not touch the top-level dir for the whole duration of a long
-            task write, so the top-level mtime alone can look stale
-            mid-job."""
-            newest = os.path.getmtime(root)
-            for dirpath, _dirs, files in os.walk(root):
-                for entry in files:
-                    try:
+        def stale(root: str) -> bool:
+            """Newest mtime anywhere under ``root`` is old — a live
+            writer may not touch a staging dir's top level for the whole
+            duration of a long task write."""
+            try:
+                newest = os.path.getmtime(root)
+                for dirpath, _dirs, files in os.walk(root):
+                    for entry in files:
                         newest = max(newest, os.path.getmtime(os.path.join(dirpath, entry)))
-                    except OSError:  # pragma: no cover - racing writer
-                        pass
-            return newest
+            except FileNotFoundError:  # pragma: no cover - racing writer/cleaner
+                return False
+            return now - newest > self.stale_staging_sec
 
         for name in os.listdir(self.base_dir) if os.path.isdir(self.base_dir) else []:
             path = os.path.join(self.base_dir, name)
-            if name.startswith("staging-"):
-                token = name[len("staging-"):]
-                head, sep, tail = token.rpartition("-p")
-                if sep and tail.isdigit():
-                    token = head  # strip the per-process suffix
-                commit_name = "commit-" + token + ".parquet"
-                if os.path.exists(os.path.join(self.lineage_dir, commit_name)):
-                    self._publish_staging(path)  # roll forward
-                elif now - _newest_mtime(path) > self.stale_staging_sec:
-                    shutil.rmtree(path)
-            elif name.startswith(".commit-") and name.endswith(".tmp"):
-                # commit temp left by a crash mid-write: the real commit
-                # file only ever appears atomically (os.link), so an OLD
-                # tmp is garbage, never a half-commit; a fresh one may
-                # be a live writer about to link it
-                if now - os.path.getmtime(path) > self.stale_staging_sec:
+            if name.startswith("staging-") and stale(path):
+                shutil.rmtree(path, ignore_errors=True)
+            elif name.startswith(".commit-") and name.endswith(".tmp") and stale(path):
+                # the real commit file only ever appears atomically
+                # (os.link), so an old tmp is garbage, never a half-commit
+                with contextlib.suppress(FileNotFoundError):
                     os.unlink(path)
-        if not os.path.isdir(self.chunks_dir):
-            return dropped
-        candidates = []
-        for name in os.listdir(self.chunks_dir):
-            if not name.startswith("part_id="):
+        dropped = set()
+        parts = os.listdir(self.chunks_dir) if os.path.isdir(self.chunks_dir) else []
+        for part in parts:
+            if not part.startswith("part_id="):
                 continue
-            tail = name.split("=", 1)[1]
-            if not tail.isdigit():
-                # ".aside-<pid>" leftovers from an interrupted publish
-                # swap: stale-gated like any other crash artifact
-                if ".aside-" in tail and now - os.path.getmtime(
-                    os.path.join(self.chunks_dir, name)
-                ) > self.stale_staging_sec:
-                    shutil.rmtree(os.path.join(self.chunks_dir, name), ignore_errors=True)
-                continue
-            pid = int(tail)
-            if pid not in completed:
-                candidates.append((pid, name))
-        if candidates:
-            completed = completed | self._committed_parts_fs()
-        for pid, name in candidates:
-            if pid in completed:
-                continue
-            shutil.rmtree(os.path.join(self.chunks_dir, name))
-            dropped.append(pid)
-        return dropped
+            for name in os.listdir(os.path.join(self.chunks_dir, part)):
+                path = os.path.join(self.chunks_dir, part, name)
+                if f"{part}/{name}" not in listed and stale(path):
+                    with contextlib.suppress(FileNotFoundError):
+                        os.unlink(path)
+                    dropped.add(int(part.split("=", 1)[1]))
+        return sorted(dropped)
 
     # -------------------------------------------------- run / resume
 
     def run(self, df: DataFrame, only_parts: list[int] | None = None) -> dict:
-        """Encode all not-yet-committed partitions of ``df`` and commit
-        them; idempotent — a second call is a no-op, a call after a
-        partial failure finishes the remainder.
+        """Encode the partitions of ``df`` this snapshot has not yet
+        committed and commit them; idempotent — a second call is a
+        no-op, a call after a partial failure finishes the remainder.
 
         ``only_parts`` restricts the run (used by tests to simulate an
         interrupted job).
 
         The returned dict carries a ``timings`` sub-dict splitting the
         commit into its phases (encode+stage write, lineage derivation,
-        publish renames, lineage commit) so the write-side cost can be
-        audited separately from encode compute.
+        moving files into the store, lineage commit) so the write-side
+        cost can be audited separately from encode compute.
         """
         spark = df.sparkSession
         timings: dict[str, float] = {}
         t0 = time.time()
-        completed = self.completed_parts(spark)
-        orphans = self._clean_orphans(completed)
+        catalog = self._catalog()
+        completed = self._committed(catalog)
+        orphans = self._clean_orphans({f for r in catalog for f in r["files"]})
+        attempt = max((r["attempt"] for r in catalog), default=0) + 1
         timings["resume_scan_sec"] = round(time.time() - t0, 3)
 
-        keyed = self.with_part(df)
-        pending = keyed
+        pending = self.with_part(df)
         if completed:
             pending = pending.filter(~F.col("_part").isin(*completed))
         if only_parts is not None:
             pending = pending.filter(F.col("_part").isin(*only_parts))
 
-        attempt = 1
-        lin = self.lineage(spark)
-        if lin is not None:
-            prev = lin.agg(F.max("attempt")).collect()[0][0]
-            attempt = int(prev or 0) + 1
-
         # Iceberg-style snapshot staging: write this attempt's chunks to
-        # a staging dir, derive lineage rows by scanning *only* the
+        # a staging dir and derive lineage rows by scanning *only* the
         # staged files (never the committed store — on a 10^12-file
-        # store a full rescan per resume is the scaling bug), then
-        # publish by renaming part dirs into the chunk store.
+        # store a full rescan per resume is the scaling bug).
         shuffled = pending.repartition(self.num_parts, F.col("_part")).sortWithinPartitions("_part")
         chunks = encode_dataframe(shuffled, codec=self.codec, chunk_rows=self.chunk_rows, part_col="_part")
-        # per-process staging path: two racers that read the same
-        # catalog compute the SAME attempt number, and a shared staging
-        # dir would let one writer's mode("overwrite") clobber the
-        # other's in-flight staged data before the commit CAS could
-        # arbitrate (round-6 review); the commit file itself remains
-        # keyed on (snapshot, attempt) only
+        # per-process staging path: Spark's _temporary dir is shared per
+        # output dir, so two racers (which read the same catalog and
+        # compute the SAME attempt number) must not share one
         staging = os.path.join(
             self.base_dir, f"staging-{self.snapshot_id}-a{attempt}-p{os.getpid()}"
         )
@@ -299,8 +224,10 @@ class EncodeJob:
         chunks.write.mode("overwrite").partitionBy("part_id").parquet(staging)
         timings["encode_and_stage_write_sec"] = round(time.time() - t0, 3)
 
-        staged_parts = [n for n in os.listdir(staging) if n.startswith("part_id=")]
-        if not staged_parts:  # nothing pending: no-op resume
+        staged = {
+            int(n.split("=", 1)[1]): n for n in os.listdir(staging) if n.startswith("part_id=")
+        }
+        if not staged:  # nothing pending: no-op resume
             shutil.rmtree(staging)
             return {
                 "committed_partitions": 0,
@@ -310,9 +237,9 @@ class EncodeJob:
                 "timings": timings,
             }
         t0 = time.time()
-        written = spark.read.parquet(staging)
-        new_lineage = (
-            written.groupBy("part_id")
+        derived = (
+            spark.read.parquet(staging)
+            .groupBy("part_id")
             .agg(
                 F.count("*").alias("chunk_count"),
                 # every column chunk of a (part, chunk) repeats num_rows,
@@ -322,36 +249,16 @@ class EncodeJob:
                 F.sum("encoded_bytes").alias("encoded_bytes"),
                 F.sum("plain_bytes").alias("plain_bytes"),
             )
-            .select(
-                F.lit(self.snapshot_id).alias("snapshot_id"),
-                F.col("part_id"),
-                F.col("chunk_count"),
-                (F.col("record_count_x") / F.col("n_cols")).cast("long").alias("record_count"),
-                F.col("encoded_bytes"),
-                F.col("plain_bytes"),
-                F.lit("committed").alias("status"),
-                F.lit(attempt).alias("attempt"),
-                F.lit(time.strftime("%Y-%m-%dT%H:%M:%S")).alias("committed_at"),
-            )
+            .collect()
         )
-        # materialize the (tiny: <= num_parts rows) lineage before the
-        # staged files move out from under the lazy plan
-        lineage_rows = new_lineage.collect()
-        lineage_schema = new_lineage.schema
         timings["lineage_derive_sec"] = round(time.time() - t0, 3)
 
-        # pre-publish recheck (optimistic concurrency, phase 1): re-read
-        # the catalog — if a concurrent writer committed any of our
-        # staged partitions while we were encoding, abort BEFORE
-        # touching the chunk store so the winner's data dirs are never
-        # clobbered.  The same-attempt CAS below closes the remaining
-        # window where both writers pass this check.
-        latest_committed = self.completed_parts(spark)
-        overlap = sorted(
-            pid
-            for pid in (int(n.split("=", 1)[1]) for n in staged_parts)
-            if pid in latest_committed and pid not in completed
-        )
+        # pre-placement recheck (optimistic concurrency, phase 1): if a
+        # concurrent writer committed any of our staged partitions under
+        # this snapshot while we were encoding, abort before placing a
+        # single file.  The commit CAS below closes the remaining window
+        # where both writers pass this check.
+        overlap = sorted((self._committed(self._catalog()) - completed) & staged.keys())
         if overlap:
             shutil.rmtree(staging)
             raise ConcurrentCommitError(
@@ -360,71 +267,91 @@ class EncodeJob:
                 "resume from the winner's lineage"
             )
 
-        # Commit ORDER (ADVICE r5 rework): claim the snapshot FIRST via
-        # the lineage-file CAS, and only then move part dirs into the
-        # chunk store.  The loser of a race now raises before touching
-        # a single published dir (the r5 order published first, so a
-        # loser could clobber the winner's data dirs and only then fail
-        # the CAS).  A crash between claim and publish leaves the
-        # staging dir + commit file, which _clean_orphans rolls forward
-        # on the next resume — the commit file is the source of truth.
+        # place: move each staged data file into chunks/part_id=N/ under
+        # a name unique to the whole store (snapshot/attempt token, part
+        # id, then Spark's job-UUID file name — Spark gives one task's
+        # file the same name in every part dir it writes), so a move
+        # never collides with another file and chunks() can key files by
+        # name.  Until the commit lists them the placed files are
+        # invisible to readers.
         t0 = time.time()
-        if lineage_rows:
-            # the commit is <= num_parts metadata rows: write it
-            # driver-side with pyarrow (an Iceberg catalog commit is a
-            # driver/metadata operation, not a Spark job — routing it
-            # through createDataFrame+write cost ~1.9 s of fixed
-            # overhead per commit)
-            import contextlib
+        files: dict[int, list[str]] = {}
+        for pid, part in staged.items():
+            os.makedirs(os.path.join(self.chunks_dir, part), exist_ok=True)
+            for name in sorted(os.listdir(os.path.join(staging, part))):
+                if name.startswith((".", "_")):  # checksums, markers
+                    continue
+                token = f"{self.snapshot_id}-a{attempt}-{pid}"
+                rel = f"{part}/part-{token}-{name.removeprefix('part-')}"
+                dst = os.path.join(self.chunks_dir, rel)
+                os.replace(os.path.join(staging, part, name), dst)
+                # restart the staleness clock: the file's write time may
+                # be long past, and until the commit lands it must not
+                # look like a crash leftover to a concurrent cleaner
+                os.utime(dst)
+                files.setdefault(pid, []).append(rel)
+        timings["publish_rename_sec"] = round(time.time() - t0, 3)
 
-            import pyarrow as pa
-            import pyarrow.parquet as pq
-            from pyspark.sql.pandas.types import to_arrow_schema
-
-            tbl = pa.Table.from_pylist(
-                [r.asDict() for r in lineage_rows], schema=to_arrow_schema(lineage_schema)
-            )
-            os.makedirs(self.lineage_dir, exist_ok=True)
-            # atomic + optimistic-concurrency commit (Iceberg snapshot
-            # CAS): write the full file to a temp path on the same
-            # filesystem, then os.link() it into place — link fails with
-            # FileExistsError if another writer committed this
-            # (snapshot, attempt) first, so the loser of a race raises
-            # instead of silently clobbering, and a crash mid-write can
-            # never leave a truncated commit file in lineage_dir.
-            tmp = os.path.join(
-                self.base_dir, f".commit-{self.snapshot_id}-a{attempt}.tmp"
-            )
-            dst = os.path.join(
-                self.lineage_dir, f"commit-{self.snapshot_id}-a{attempt}.parquet"
-            )
-            pq.write_table(tbl, tmp)
-            try:
-                os.link(tmp, dst)
-            except FileExistsError:
-                shutil.rmtree(staging, ignore_errors=True)
-                raise ConcurrentCommitError(
-                    f"snapshot {self.snapshot_id!r} attempt {attempt} was "
-                    f"committed by a concurrent writer ({dst} exists); "
-                    "re-run to resume from the winner's lineage"
-                ) from None
-            except FileNotFoundError:  # pragma: no cover - cleaner race
-                shutil.rmtree(staging, ignore_errors=True)
+        # commit: the <= num_parts manifest rows are written driver-side
+        # with pyarrow (a catalog commit is a metadata operation, not a
+        # Spark job — routing it through createDataFrame+write cost
+        # ~1.9 s of fixed overhead per commit), to a temp path on the
+        # same filesystem, then os.link()ed into place.  link fails with
+        # FileExistsError if another writer committed this (snapshot,
+        # attempt) first, so the loser of a race raises instead of
+        # clobbering, and a crash mid-write never leaves a truncated
+        # commit file in lineage_dir.
+        t0 = time.time()
+        committed_at = time.strftime("%Y-%m-%dT%H:%M:%S")
+        tbl = pa.Table.from_pylist(
+            [
+                {
+                    "snapshot_id": self.snapshot_id,
+                    "part_id": r["part_id"],
+                    "chunk_count": r["chunk_count"],
+                    "record_count": r["record_count_x"] // r["n_cols"],
+                    "encoded_bytes": r["encoded_bytes"],
+                    "plain_bytes": r["plain_bytes"],
+                    "status": "committed",
+                    "attempt": attempt,
+                    "committed_at": committed_at,
+                    "files": files[r["part_id"]],
+                }
+                for r in derived
+            ],
+            schema=LINEAGE_SCHEMA,
+        )
+        os.makedirs(self.lineage_dir, exist_ok=True)
+        tmp = os.path.join(
+            self.base_dir, f".commit-{self.snapshot_id}-a{attempt}-p{os.getpid()}.tmp"
+        )
+        dst = os.path.join(self.lineage_dir, f"commit-{self.snapshot_id}-a{attempt}.parquet")
+        pq.write_table(tbl, tmp)
+        try:
+            os.link(tmp, dst)
+        except (FileExistsError, FileNotFoundError) as exc:
+            # lost the race: take back every placed file, unseen
+            for rel in (rel for rels in files.values() for rel in rels):
+                with contextlib.suppress(FileNotFoundError):
+                    os.unlink(os.path.join(self.chunks_dir, rel))
+            shutil.rmtree(staging, ignore_errors=True)
+            if isinstance(exc, FileNotFoundError):  # pragma: no cover - cleaner race
                 raise ConcurrentCommitError(
                     "commit tmp vanished before linking (a concurrent "
                     "cleaner treated it as stale); re-run to resume"
                 ) from None
-            finally:
-                with contextlib.suppress(FileNotFoundError):
-                    os.unlink(tmp)
+            raise ConcurrentCommitError(
+                f"snapshot {self.snapshot_id!r} attempt {attempt} was "
+                f"committed by a concurrent writer ({dst} exists); "
+                "re-run to resume from the winner's lineage"
+            ) from None
+        finally:
+            with contextlib.suppress(FileNotFoundError):
+                os.unlink(tmp)
         timings["lineage_commit_sec"] = round(time.time() - t0, 3)
-        # publish: move the now-committed attempt's part dirs into the
-        # chunk store (roll-forward-safe, see _publish_staging)
-        t0 = time.time()
-        self._publish_staging(staging)
-        timings["publish_rename_sec"] = round(time.time() - t0, 3)
+        shutil.rmtree(staging, ignore_errors=True)
         return {
-            "committed_partitions": len(lineage_rows),
+            "committed_partitions": len(derived),
             "skipped_partitions": len(completed),
             "orphans_cleaned": orphans,
             "attempt": attempt,
@@ -434,7 +361,34 @@ class EncodeJob:
     # -------------------------------------------------- read back
 
     def chunks(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(self.chunks_dir)
+        """The committed store: exactly the files the lineage commits
+        list (``basePath`` keeps ``part_id`` an int partition column).
+        Files a writer placed but never committed stay invisible.
+
+        Chunk ids restart at 0 in every file, so when several snapshots
+        hold one part, the k-th file of a part has its chunk ids offset
+        by ``k << 32`` to keep (part_id, chunk_id) a unique chunk-group
+        key; a part with a single file reads unchanged.  Placed names
+        are unique across the store, so the file name alone picks the
+        offset."""
+        rank: dict[str, int] = {}
+        per_part: dict[int, int] = {}
+        for r in self._catalog():
+            for f in r["files"]:
+                rank[f] = per_part.get(r["part_id"], 0)
+                per_part[r["part_id"]] = rank[f] + 1
+        if not rank:
+            raise ValueError(f"chunk store {self.base_dir!r} has no committed snapshot")
+        df = spark.read.option("basePath", self.chunks_dir).parquet(
+            *[os.path.join(self.chunks_dir, f) for f in rank]
+        )
+        offsets = [(os.path.basename(f), k << 32) for f, k in rank.items() if k]
+        if not offsets:
+            return df
+        offset = F.create_map(*[F.lit(x) for pair in offsets for x in pair])[
+            F.col("_metadata.file_name")
+        ]
+        return df.withColumn("chunk_id", F.col("chunk_id") + F.coalesce(offset, F.lit(0)))
 
     def decode(self, spark: SparkSession, schema, predicate=None, num_partitions=None) -> DataFrame:
         """Decode the committed store; ``predicate=(column, lo, hi)``

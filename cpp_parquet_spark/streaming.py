@@ -3,11 +3,13 @@
 The reference is batch-only (single Flush, parquet-file.cc:118-177);
 this module gives the engine a streaming front door the Spark-idiomatic
 way: ``readStream`` → ``foreachBatch`` → the same checkpointed
-EncodeJob used for batch, one lineage snapshot per micro-batch.  Spark's
-own streaming checkpoint guarantees each micro-batch is delivered at
-least once; EncodeJob's content-hash partition ids + orphan cleanup
-make re-delivery idempotent, so the combination is effectively
-exactly-once into the chunk store.
+EncodeJob used for batch, one lineage snapshot per micro-batch; the
+chunk store is the union of all committed snapshots.  Spark's own
+streaming checkpoint guarantees each micro-batch is delivered at least
+once; a re-delivered batch runs under the same snapshot id
+(``{snapshot_id}-b{batch_id}``), and EncodeJob's content-hash partition
+ids let it skip every part that snapshot already committed, so the
+combination is effectively exactly-once into the chunk store.
 
 Also provides a windowed/watermarked stats stream over the ``events``
 table shape (ts, user_id, event_type, amount) as the

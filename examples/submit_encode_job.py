@@ -8,8 +8,11 @@ Package and submit (north rule: "runs via spark-submit --py-files"):
         examples/submit_encode_job.py <input_parquet_dir> <output_dir> \\
         [num_parts] [snapshot_id]
 
-The job is resumable: re-submitting with the same output_dir skips
-already-committed partitions (lineage anti-join) and finishes the rest.
+The job is resumable: re-submitting with the same output_dir and the
+same snapshot_id skips the partitions that snapshot already committed
+and finishes the rest.  A different snapshot_id adds a new snapshot to
+the store, which reads as the union of all committed snapshots (so the
+same input under a new snapshot_id is stored twice).
 """
 
 import sys

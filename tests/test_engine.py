@@ -435,8 +435,8 @@ def test_decode_grouped_narrow_chain_no_exchange(spark):
 def test_decode_grouped_window_prune_matches_semi_join(spark):
     """Round-6: the grouped window prune (predicate + grouped=True)
     keeps exactly the chunk groups the semi-join form keeps — without
-    re-executing the upstream encode (the r5 plan contained the whole
-    encode subtree twice, plans/r06/pruned_scan_agg_before.txt)."""
+    re-executing the upstream encode (the semi-join plan contained the
+    whole encode subtree twice; the window prune plan contains it once)."""
     df = (
         spark.range(0, 40_000)
         .select(F.col("id").alias("k"), (F.col("id") % 13).cast("double").alias("v"))

@@ -58,8 +58,13 @@ def test_resume_after_partial_failure(spark, workdir):
     # simulate a crash *between* chunk write and lineage commit: orphan dir
     orphan = os.path.join(job.chunks_dir, f"part_id={all_parts[-1]}")
     os.makedirs(orphan, exist_ok=True)
-    with open(os.path.join(orphan, "garbage.parquet"), "w") as f:
+    garbage = os.path.join(orphan, "garbage.parquet")
+    with open(garbage, "w") as f:
         f.write("")
+    # aged past the staleness gate: a fresh unlisted file may belong to
+    # a live concurrent writer and is left alone
+    old = os.path.getmtime(garbage) - 2 * job.stale_staging_sec
+    os.utime(garbage, (old, old))
 
     r2 = job.run(src)
     assert r2["skipped_partitions"] == len(first_half)
@@ -148,30 +153,105 @@ def test_fresh_unclaimed_staging_survives_cleanup(spark, workdir):
     assert not os.path.isdir(live), "stale unclaimed staging is dropped"
 
 
-def test_claimed_staging_rolls_forward(spark, workdir):
-    """Round-6 commit order: the lineage CAS claims the snapshot BEFORE
-    part dirs move into the chunk store; a crash in between leaves a
-    claimed staging dir that resume must roll FORWARD (publish), never
-    delete — the commit file is the source of truth."""
-    import shutil as sh
+def _assert_decodes_exactly(spark, job, src):
+    decoded = job.decode(spark, src.schema)
+    assert decoded.count() == src.count()
+    a = src.select(F.sha2("content", 256).alias("s"))
+    b = decoded.select(F.sha2("content", 256).alias("s"))
+    assert a.exceptAll(b).count() == 0
+    assert b.exceptAll(a).count() == 0
 
+
+def test_uncommitted_files_are_invisible_then_cleaned(spark, workdir):
+    """A writer that crashed between placing its files in chunks/ and the
+    commit CAS leaves files no commit lists: a reader sees exactly the
+    committed rows, and a resume drops the leftovers once they are older
+    than stale_staging_sec (a fresh one may be a live writer's)."""
     src = _src(spark)
     job = EncodeJob(workdir, num_parts=4, chunk_rows=4096)
     job.run(src)
-    # simulate the crash window: claimed (commit file exists) but one
-    # part dir still sits in staging
-    part = [n for n in os.listdir(job.chunks_dir) if n.startswith("part_id=")][0]
-    staging = os.path.join(workdir, "staging-snap-0-a1")
-    os.makedirs(staging, exist_ok=True)
-    sh.move(os.path.join(job.chunks_dir, part), os.path.join(staging, part))
-    assert not os.path.isdir(os.path.join(job.chunks_dir, part))
+    planted = []
+    for part in sorted(os.listdir(job.chunks_dir)):
+        d = os.path.join(job.chunks_dir, part)
+        for name in sorted(os.listdir(d)):
+            if name.startswith("."):
+                continue
+            copy = os.path.join(d, "part-crashed-a9-" + name.removeprefix("part-"))
+            shutil.copyfile(os.path.join(d, name), copy)
+            planted.append((int(part.split("=", 1)[1]), copy))
+    assert planted
 
-    r = job.run(src)  # resume: rolls the publish forward
-    assert os.path.isdir(os.path.join(job.chunks_dir, part))
-    assert not os.path.isdir(staging)
-    assert r["committed_partitions"] == 0  # nothing re-encoded
-    decoded = job.decode(spark, src.schema)
-    assert decoded.count() == src.count()
+    # a reader sees exactly the committed chunk rows, and so decodes
+    # exactly the committed rows
+    committed_chunks = job.lineage(spark).agg(F.sum("chunk_count")).collect()[0][0]
+    assert job.chunks(spark).count() == committed_chunks
+    _assert_decodes_exactly(spark, job, src)
+    r = job.run(src)  # fresh: may be a live writer's, so left alone
+    assert r["committed_partitions"] == 0
+    assert r["orphans_cleaned"] == []
+    assert all(os.path.exists(p) for _, p in planted)
+
+    for _, p in planted:
+        old = os.path.getmtime(p) - 2 * job.stale_staging_sec
+        os.utime(p, (old, old))
+    r = job.run(src)
+    assert r["committed_partitions"] == 0
+    assert r["orphans_cleaned"] == sorted({pid for pid, _ in planted})
+    assert not any(os.path.exists(p) for _, p in planted)
+    _assert_decodes_exactly(spark, job, src)
+
+
+def test_snapshots_share_one_store(spark, workdir):
+    """Snapshots writing disjoint slices of the source into one base_dir
+    (what encode_stream does per micro-batch) make a store that is their
+    union.  At num_parts=8 one Spark task writes several parts, and Spark
+    gives its file the same name in every part dir, so placed names must
+    be unique across the whole store; the first snapshot covers only
+    half of the parts, so a part's files do not line up by snapshot."""
+    src = _src(spark)
+    jobs = [
+        EncodeJob(workdir, num_parts=8, chunk_rows=4096, snapshot_id=f"s-b{i}") for i in range(3)
+    ]
+    third = F.pmod(F.xxhash64(*src.columns), F.lit(3))
+    low = F.col("_part") < 4
+    batches = [(third == 0) & low, (third == 1) | ((third == 0) & ~low), third == 2]
+    keyed = jobs[0].with_part(src)
+    for job, cond in zip(jobs, batches):
+        res = job.run(keyed.filter(cond).drop("_part"))
+        assert res["committed_partitions"] >= 1
+        assert res["skipped_partitions"] == 0
+    assert {r["snapshot_id"] for r in jobs[0].lineage(spark).collect()} == {"s-b0", "s-b1", "s-b2"}
+    _assert_decodes_exactly(spark, jobs[2], src)
+    placed = [f for _, _, fs in os.walk(jobs[0].chunks_dir) for f in fs]
+    assert len(placed) == len(set(placed)), "placed file names collide across part dirs"
+
+
+def test_store_without_manifest_fails_loudly(spark, workdir):
+    """A lineage commit without the ``files`` manifest (a store written
+    by the rename-publish layout) is refused by name, never read as an
+    empty or partial store."""
+    import re
+
+    import pyarrow.parquet as pq
+
+    src = _src(spark)
+    job = EncodeJob(workdir, num_parts=4)
+    job.run(src)
+    for name in os.listdir(job.lineage_dir):
+        path = os.path.join(job.lineage_dir, name)
+        pq.write_table(pq.read_table(path).drop_columns(["files"]), path)
+    with pytest.raises(ValueError, match=re.escape(workdir)):
+        job.run(src)
+    with pytest.raises(ValueError, match=re.escape(workdir)):
+        job.chunks(spark)
+
+
+def _store_files(job):
+    return {
+        os.path.join(dp, f): os.path.getmtime(os.path.join(dp, f))
+        for dp, _, fs in os.walk(job.chunks_dir)
+        for f in fs
+    }
 
 
 def test_concurrent_commit_loser_raises(spark, workdir):
@@ -184,13 +264,14 @@ def test_concurrent_commit_loser_raises(spark, workdir):
     winner = EncodeJob(workdir, num_parts=4)
     winner.run(src)
     lineage_before = sorted(os.listdir(winner.lineage_dir))
+    store_before = _store_files(winner)
 
     class RacingJob(EncodeJob):
         # simulate the race window: the loser read the catalog BEFORE
         # the winner committed, so it sees no lineage and recomputes
         # the same attempt number
-        def lineage(self, spark):
-            return None
+        def _catalog(self):
+            return []
 
     loser = RacingJob(workdir, num_parts=4)
     with pytest.raises(ConcurrentCommitError):
@@ -198,46 +279,43 @@ def test_concurrent_commit_loser_raises(spark, workdir):
     assert sorted(os.listdir(winner.lineage_dir)) == lineage_before
     # and the winner's records still read back clean
     assert winner.lineage(spark).filter(F.col("status") == "committed").count() == 4
+    # the loser took back every file it placed before losing the CAS
+    assert _store_files(winner) == store_before
+    _assert_decodes_exactly(spark, winner, src)
 
 
 def test_concurrent_commit_detected_before_publish(spark, workdir):
     """Phase-1 concurrency check: if the winner commits while the loser
-    is encoding, the loser aborts BEFORE renaming anything into the
-    chunk store — the winner's data dirs are untouched."""
+    is encoding, the loser aborts BEFORE placing any file in the
+    chunk store — the winner's files are untouched."""
     from cpp_parquet_spark.lineage import ConcurrentCommitError, EncodeJob
 
     src = _src(spark)
     winner = EncodeJob(workdir, num_parts=4)
     winner.run(src)
-    store_mtimes = {
-        n: os.path.getmtime(os.path.join(winner.chunks_dir, n))
-        for n in os.listdir(winner.chunks_dir)
-    }
+    store_before = _store_files(winner)
 
     class LateLoser(EncodeJob):
         # real-race timeline: when the loser scanned, the winner had
-        # neither published nor committed (empty catalog, empty store —
+        # neither placed nor committed (empty catalog, empty store —
         # so no orphan cleaning either); the winner finished while the
-        # loser was encoding, so only the pre-publish recheck sees it
+        # loser was encoding, so only the pre-placement recheck sees it
         def __init__(self, *a, **kw):
             super().__init__(*a, **kw)
             self._calls = 0
 
-        def lineage(self, spark):
+        def _catalog(self):
             self._calls += 1
-            if self._calls <= 2:  # initial completed_parts + attempt calc
-                return None
-            return super().lineage(spark)
+            if self._calls <= 1:  # the initial resume scan
+                return []
+            return super()._catalog()
 
-        def _clean_orphans(self, completed):
+        def _clean_orphans(self, listed):
             return []
 
     loser = LateLoser(workdir, num_parts=4)
     with pytest.raises(ConcurrentCommitError):
         loser.run(src)
-    after = {
-        n: os.path.getmtime(os.path.join(winner.chunks_dir, n))
-        for n in os.listdir(winner.chunks_dir)
-    }
-    assert after == store_mtimes  # no staged dir was published
+    assert _store_files(winner) == store_before  # no staged file was placed
+    _assert_decodes_exactly(spark, winner, src)
     assert not [n for n in os.listdir(workdir) if n.startswith("staging-")]

@@ -30,6 +30,34 @@ def test_streaming_encode_availablenow(spark, tmp_path):
     assert all(s.startswith("s-b") for s in snaps)
 
 
+def test_streaming_encode_multi_batch(spark, tmp_path, sf_small):
+    """Several micro-batches commit several snapshots into one store:
+    each batch's parts are committed under its own snapshot id, and the
+    store is their union (no batch skips or replaces another's parts)."""
+    import os
+
+    src_dir = str(tmp_path / "src")
+    src = source_repos_from_documents(spark, sf_small)
+    src.repartition(3).write.parquet(src_dir)
+    n_files = len([n for n in os.listdir(src_dir) if n.endswith(".parquet")])
+    assert n_files >= 3
+
+    stream = spark.readStream.schema(src.schema).option("maxFilesPerTrigger", 1).parquet(src_dir)
+    job = EncodeJob(str(tmp_path / "job"), num_parts=4, chunk_rows=4096, snapshot_id="s")
+    q = encode_stream(stream, job, str(tmp_path / "ckpt"))
+    q.awaitTermination(300)
+
+    decoded = job.decode(spark, src.schema)
+    assert decoded.count() == src.count()
+    a = src.select(F.sha2("content", 256).alias("s"))
+    b = decoded.select(F.sha2("content", 256).alias("s"))
+    assert a.exceptAll(b).count() == 0
+    assert b.exceptAll(a).count() == 0
+    # one lineage snapshot per micro-batch
+    snaps = {r["snapshot_id"] for r in job.lineage(spark).collect()}
+    assert snaps == {f"s-b{i}" for i in range(n_files)}
+
+
 def test_stream_to_real_parquet(spark, tmp_path):
     """Streaming micro-batches land as real Parquet part files that
     Spark's own reader (an independent parser) reads back."""
