@@ -23,8 +23,8 @@ from cpp_parquet_spark.kernels import rle
 from cpp_parquet_spark.kernels.bitpack import bit_width_for
 from cpp_parquet_spark.kernels.dictionary import decode_dict, encode_dict
 from cpp_parquet_spark.kernels.fsst import decode_fsst, encode_fsst
-from cpp_parquet_spark.kernels.levels import ShreddedColumn, unshred
-from cpp_parquet_spark.kernels.plain import decode_plain, encode_plain, plain_size
+from cpp_parquet_spark.kernels.levels import ShreddedColumn, framed_levels, unshred
+from cpp_parquet_spark.kernels.plain import decode_plain, encode_plain, fixed_np, plain_size
 from cpp_parquet_spark.kernels.rle_runs import decode_rle_runs, encode_rle_runs
 from cpp_parquet_spark.schema_plan import ColumnPlan
 
@@ -71,12 +71,8 @@ def _encode_values(values: pa.Array, codec: str, physical: str) -> bytes:
     if codec in ("for", "delta"):
         from cpp_parquet_spark.kernels.forpack import encode_delta, encode_for
 
-        if pa.types.is_date(values.type):
-            # pyarrow 16 has no date32->int64 cast; go via int32
-            values = values.cast(pa.int32()).cast(pa.int64())
-        elif pa.types.is_timestamp(values.type):
-            values = values.cast(pa.int64())
-        return encode_for(values) if codec == "for" else encode_delta(values)
+        ints = fixed_np(values)
+        return encode_for(ints) if codec == "for" else encode_delta(ints)
     raise ValueError(f"unknown codec {codec}")
 
 
@@ -133,17 +129,8 @@ def serialize_chunk(sh: ShreddedColumn, codec: str) -> tuple[bytes, ChunkMeta]:
     out += sh.num_entries.to_bytes(4, "little")
     out += len(sh.values).to_bytes(4, "little")
 
-    level_bytes = 0
-    if plan.max_rep > 0:
-        enc = rle.encode_hybrid(sh.rep_levels, bit_width_for(plan.max_rep))
-        out += len(enc).to_bytes(4, "little")
-        out += enc
-        level_bytes += 4 + len(enc)
-    if plan.max_def > 0:
-        enc = rle.encode_hybrid(sh.def_levels, bit_width_for(plan.max_def))
-        out += len(enc).to_bytes(4, "little")
-        out += enc
-        level_bytes += 4 + len(enc)
+    levels = framed_levels(sh)
+    out += levels
 
     data = _encode_values(sh.values, codec, plan.physical)
     out += len(data).to_bytes(4, "little")
@@ -154,7 +141,7 @@ def serialize_chunk(sh: ShreddedColumn, codec: str) -> tuple[bytes, ChunkMeta]:
         num_entries=sh.num_entries,
         num_values=len(sh.values),
         encoded_bytes=len(out),
-        plain_bytes=16 + level_bytes + 4 + pvb,
+        plain_bytes=16 + len(levels) + 4 + pvb,
         plain_value_bytes=pvb,
     )
     return bytes(out), meta

@@ -108,6 +108,14 @@ def _encode_table(
 
     import time
 
+    def serialize(sh, codec):
+        try:
+            return (codec, *serialize_chunk(sh, codec))
+        except (ValueError, TypeError, pa.lib.ArrowNotImplementedError, pa.lib.ArrowInvalid):
+            # a sample-based codec assumption failed on the full chunk
+            # (e.g. alpha alphabet overflow) — PLAIN always works
+            return ("plain", *serialize_chunk(sh, "plain"))
+
     rows: list[tuple] = []
     n_rows = table.num_rows
     for plan in plans:
@@ -138,24 +146,10 @@ def _encode_table(
             codec = select_codec(sh.values, plan.physical, mode=codec_mode)
             if memo is not None:
                 memo[plan.dotted] = codec
-        try:
-            blob, meta = serialize_chunk(sh, codec)
-        except (ValueError, TypeError, pa.lib.ArrowNotImplementedError, pa.lib.ArrowInvalid):
-            # a sample-based codec assumption failed on the full chunk
-            # (e.g. alpha alphabet overflow) — PLAIN always works
-            codec = "plain"
-            blob, meta = serialize_chunk(sh, codec)
+        codec, blob, meta = serialize(sh, codec)
         if memoized and meta.encoded_bytes > meta.plain_bytes:
-            # drift guard: the memoized codec lost to PLAIN — reselect.
-            # The reselected codec gets the same failure fallback as the
-            # first attempt (a sample-based choice can still fail on the
-            # full chunk, e.g. alpha alphabet overflow).
-            codec = select_codec(sh.values, plan.physical, mode=codec_mode)
-            try:
-                blob, meta = serialize_chunk(sh, codec)
-            except (ValueError, TypeError, pa.lib.ArrowNotImplementedError, pa.lib.ArrowInvalid):
-                codec = "plain"
-                blob, meta = serialize_chunk(sh, codec)
+            # drift guard: the memoized codec lost to PLAIN — reselect
+            codec, blob, meta = serialize(sh, select_codec(sh.values, plan.physical, mode=codec_mode))
             memo[plan.dotted] = codec
         rows.append(
             (

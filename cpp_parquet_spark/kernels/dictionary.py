@@ -21,17 +21,21 @@ from cpp_parquet_spark.kernels.plain import decode_plain, encode_plain
 from cpp_parquet_spark.kernels.rle import decode_hybrid, encode_hybrid
 
 
-def encode_dict(values: pa.Array, physical: str) -> bytes:
-    n = len(values)
-    if n == 0:
-        return (0).to_bytes(4, "little")
+def dictionary_split(values: pa.Array) -> tuple[pa.Array, np.ndarray, int]:
+    """(dictionary in first-seen order, uint64 indices, index bit width)
+    — shared by the SGC ``dict`` codec and Parquet RLE_DICTIONARY pages."""
     if isinstance(values, pa.ChunkedArray):  # pragma: no cover - defensive
         values = values.combine_chunks()
     denc = values.dictionary_encode()
-    dictionary = denc.dictionary
-    indices = np.asarray(denc.indices, dtype=np.uint64)
+    width = bit_width_for(max(len(denc.dictionary) - 1, 0))
+    return denc.dictionary, np.asarray(denc.indices, dtype=np.uint64), width
+
+
+def encode_dict(values: pa.Array, physical: str) -> bytes:
+    if len(values) == 0:
+        return (0).to_bytes(4, "little")
+    dictionary, indices, width = dictionary_split(values)
     card = len(dictionary)
-    width = bit_width_for(max(card - 1, 0))
     dict_bytes = encode_plain(dictionary, physical)
     idx_bytes = encode_hybrid(indices, width)
     out = bytearray(card.to_bytes(4, "little"))

@@ -22,6 +22,8 @@ from dataclasses import dataclass
 import numpy as np
 import pyarrow as pa
 
+from cpp_parquet_spark.kernels.bitpack import bit_width_for
+from cpp_parquet_spark.kernels.rle import encode_hybrid
 from cpp_parquet_spark.schema_plan import ColumnPlan
 
 
@@ -32,6 +34,23 @@ class ShreddedColumn:
     rep_levels: np.ndarray | None  # uint8, len = num_entries; None if max_rep == 0
     values: pa.Array  # flat, non-null leaf values in entry order
     num_entries: int
+
+
+def encode_levels(sh: ShreddedColumn) -> tuple[bytes, bytes]:
+    """(rep, def) level streams, hybrid RLE at the bit width of each
+    maximum (EncodeLevels, parquet-column.cc:307-335); b"" for a stream
+    the column does not have."""
+    plan = sh.plan
+    rep = encode_hybrid(sh.rep_levels, bit_width_for(plan.max_rep)) if plan.max_rep > 0 else b""
+    dfn = encode_hybrid(sh.def_levels, bit_width_for(plan.max_def)) if plan.max_def > 0 else b""
+    return rep, dfn
+
+
+def framed_levels(sh: ShreddedColumn) -> bytes:
+    """[u32 length + rep][u32 length + def], each only if the column has
+    that stream (Flush framing, parquet-column.cc:341-365, 436-443)."""
+    has = (sh.plan.max_rep > 0, sh.plan.max_def > 0)
+    return b"".join(len(s).to_bytes(4, "little") + s for s, h in zip(encode_levels(sh), has) if h)
 
 
 def _validity(arr: pa.Array) -> np.ndarray:

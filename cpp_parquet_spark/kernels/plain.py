@@ -35,12 +35,23 @@ _FIXED_NP = {
 }
 
 
-def _values_np(values: pa.Array, physical: str) -> np.ndarray:
+def fixed_np(values: pa.Array) -> np.ndarray:
+    """Numpy view of a fixed-width array; dates and timestamps become
+    their raw int64 day / tick counts (pyarrow 16 has no date32->int64
+    cast, so dates go via int32)."""
     t = values.type
-    if pa.types.is_timestamp(t) or pa.types.is_date(t):
-        values = values.cast(pa.int64() if physical == "INT64" else pa.int32())
-    arr = np.asarray(values)
-    return np.ascontiguousarray(arr.astype(_FIXED_NP[physical], copy=False))
+    if pa.types.is_date32(t):
+        return np.asarray(values.cast(pa.int32())).astype(np.int64)
+    if pa.types.is_timestamp(t):
+        return np.asarray(values.cast(pa.int64()))
+    return np.asarray(values)
+
+
+def physical_np(values: pa.Array, physical: str) -> np.ndarray:
+    """Values in the little-endian dtype of their Parquet physical type
+    (integers wrap to that width: unsigned columns keep their bit
+    pattern)."""
+    return np.ascontiguousarray(fixed_np(values).astype(_FIXED_NP[physical], copy=False))
 
 
 def decimal_type_length(precision: int) -> int:
@@ -83,7 +94,7 @@ def encode_plain(values: pa.Array, physical: str) -> bytes:
     if physical == "FIXED_LEN_BYTE_ARRAY":
         return _flba_payload(values).tobytes() if n else b""
     if physical != "BYTE_ARRAY":
-        return _values_np(values, physical).tobytes() if n else b""
+        return physical_np(values, physical).tobytes() if n else b""
     if n == 0:
         return b""
     from cpp_parquet_spark.kernels.forpack import encode_for
@@ -154,7 +165,7 @@ def encode_plain_parquet(values: pa.Array, physical: str) -> bytes:
             payload = payload.reshape(-1, w)[:, ::-1][:, w - m :]
         return payload.tobytes()
     if physical != "BYTE_ARRAY":
-        return _values_np(values, physical).tobytes() if n else b""
+        return physical_np(values, physical).tobytes() if n else b""
     if n == 0:
         return b""
     lengths, payload = _byte_components(values)

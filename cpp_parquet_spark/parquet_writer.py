@@ -21,16 +21,20 @@ Differences from the reference, by design:
   * the *correct* Dremel level maxima from schema_plan (the reference
     over-counts repetition levels, avro-schema-walker.cc:244-246).
 
-Level streams are RLE/bit-packed hybrid with a u32 length prefix
-(exactly EncodeLevels → Flush framing, parquet-column.cc:307-335,
-436-443); data values are wire PLAIN (encode_plain_parquet).
-
-Beyond the reference (which writes PLAIN/UNCOMPRESSED only and no
-statistics): low-cardinality chunks get a DICTIONARY_PAGE +
-RLE_DICTIONARY data pages (kernels/rle.py's hybrid coder IS the wire
-format), column chunks carry min/max/null_count Statistics for
-row-group pruning, and pages can be GZIP-compressed
-(``compression="gzip"``).
+Pages are built from the same kernels as the engine's own chunks
+(chunk.serialize_chunk), so each concept has one implementation:
+  * level streams: kernels/levels.encode_levels — RLE/bit-packed hybrid,
+    u32-framed in v1 pages exactly like EncodeLevels → Flush
+    (parquet-column.cc:307-335, 436-443), bare in DATA_PAGE_V2;
+  * values: wire PLAIN (encode_plain_parquet) or, beyond the reference's
+    PLAIN-only pages, DELTA_BINARY_PACKED / DELTA_LENGTH_BYTE_ARRAY from
+    the FOR packer (kernels/forpack.py);
+  * dictionaries: kernels/dictionary.dictionary_split feeds a
+    DICTIONARY_PAGE + RLE_DICTIONARY pages (kernels/rle.py's hybrid coder
+    IS the wire format) for low-cardinality chunks.
+v1 and v2 pages frame the same values section.  Column chunks also carry
+min/max/null_count Statistics for row-group pruning (the reference
+writes none), and pages can be GZIP-compressed (``compression="gzip"``).
 """
 
 from __future__ import annotations
@@ -41,10 +45,11 @@ import numpy as np
 import pyarrow as pa
 
 from cpp_parquet_spark import thrift_compact as tc
-from cpp_parquet_spark.kernels import rle
-from cpp_parquet_spark.kernels.bitpack import bit_width_for
-from cpp_parquet_spark.kernels.levels import ShreddedColumn, shred
-from cpp_parquet_spark.kernels.plain import encode_plain_parquet
+from cpp_parquet_spark.kernels.dictionary import dictionary_split
+from cpp_parquet_spark.kernels.forpack import encode_delta_binary_packed, encode_delta_length_byte_array
+from cpp_parquet_spark.kernels.levels import ShreddedColumn, encode_levels, framed_levels, shred
+from cpp_parquet_spark.kernels.plain import encode_plain_parquet, physical_np
+from cpp_parquet_spark.kernels.rle import encode_hybrid
 from cpp_parquet_spark.schema_plan import ColumnPlan, plan_from_schema
 
 MAGIC = b"PAR1"
@@ -259,31 +264,11 @@ _MAX_STAT_BYTES = 64
 _CODEC_GZIP = 2
 
 
-def _delta_length_byte_array(values: pa.Array) -> bytes:
-    from cpp_parquet_spark.kernels.deltabp import encode_delta_length_byte_array
-
-    return encode_delta_length_byte_array(values)
-
-
 def _gzip(data: bytes) -> bytes:
     import zlib
 
     co = zlib.compressobj(6, zlib.DEFLATED, 31)  # wbits=31: gzip framing
     return co.compress(data) + co.flush()
-
-
-def _levels_block(sh: ShreddedColumn, plan: ColumnPlan) -> bytearray:
-    """[u32+RLE rep][u32+RLE def] framing (parquet-column.cc:436-443)."""
-    body = bytearray()
-    if plan.max_rep > 0:
-        enc = rle.encode_hybrid(sh.rep_levels, bit_width_for(plan.max_rep))
-        body += len(enc).to_bytes(4, "little")
-        body += enc
-    if plan.max_def > 0:
-        enc = rle.encode_hybrid(sh.def_levels, bit_width_for(plan.max_def))
-        body += len(enc).to_bytes(4, "little")
-        body += enc
-    return body
 
 
 def _page(page_type: int, body: bytes, dph: bytes, dph_fid: int, gzip: bool) -> tuple[bytes, int]:
@@ -301,35 +286,23 @@ def _page(page_type: int, body: bytes, dph: bytes, dph_fid: int, gzip: bool) -> 
     return header + bytes(body), len(header) + raw_len
 
 
-def _page_values(sh: ShreddedColumn, plan: ColumnPlan, encoding: int, int96: bool) -> bytes:
-    """Encoded values section of a data page (shared by v1 and v2)."""
+def _page_values(sh: ShreddedColumn, encoding: int, int96: bool) -> bytes:
+    """Encoded values section of a non-dictionary data page."""
     if encoding == _ENC_DELTA_LENGTH_BA:
-        return _delta_length_byte_array(sh.values)
+        return encode_delta_length_byte_array(sh.values)
     if encoding == _ENC_DELTA_BP:
-        from cpp_parquet_spark.kernels.deltabp import encode_delta_binary_packed_array
-
-        return encode_delta_binary_packed_array(sh.values)
-    return _page_values_plain(sh.values, plan.physical, int96=int96)
+        return encode_delta_binary_packed(physical_np(sh.values, sh.plan.physical))
+    return _page_values_plain(sh.values, sh.plan.physical, int96=int96)
 
 
-def _data_page_v2(
-    sh: ShreddedColumn, plan: ColumnPlan, values_body: bytes, encoding: int, gzip: bool
-) -> tuple[bytes, int]:
+def _data_page_v2(sh: ShreddedColumn, values_body: bytes, encoding: int, gzip: bool) -> tuple[bytes, int]:
     """One DATA_PAGE_V2 (public Parquet spec): rep/def level runs sit
     *uncompressed* ahead of the (optionally compressed) values block,
     without v1's u32 prefixes — their byte lengths live in the header
     (definition/repetition_levels_byte_length), so readers can skip to
     the values without decoding levels."""
-    rep = (
-        rle.encode_hybrid(sh.rep_levels, bit_width_for(plan.max_rep))
-        if plan.max_rep > 0
-        else b""
-    )
-    deflev = (
-        rle.encode_hybrid(sh.def_levels, bit_width_for(plan.max_def))
-        if plan.max_def > 0
-        else b""
-    )
+    plan = sh.plan
+    rep, deflev = encode_levels(sh)
     num_rows = (
         int(np.count_nonzero(sh.rep_levels == 0)) if plan.max_rep > 0 else sh.num_entries
     )
@@ -358,12 +331,9 @@ def _data_page_v2(
     return header + rep + deflev + bytes(comp_values), len(header) + raw_len
 
 
-def _data_page(
-    sh: ShreddedColumn, plan: ColumnPlan, int96: bool = False, gzip: bool = False, encoding: int = _ENC_PLAIN
-) -> tuple[bytes, int]:
-    """One v1 data page: PageHeader + level blocks + encoded values."""
-    body = _levels_block(sh, plan)
-    body += _page_values(sh, plan, encoding, int96)
+def _data_page(sh: ShreddedColumn, values_body: bytes, encoding: int, gzip: bool) -> tuple[bytes, int]:
+    """One v1 data page: PageHeader + u32-framed level streams + values."""
+    body = framed_levels(sh) + values_body
     dph = tc.struct(
         tc.f_i32(1, sh.num_entries),  # num_values incl. nulls
         tc.f_i32(2, encoding),
@@ -383,22 +353,6 @@ def _dictionary_page(dictionary: pa.Array, physical: str, gzip: bool) -> tuple[b
         7,  # PageHeader.dictionary_page_header
         gzip,
     )
-
-
-def _dict_data_page(sh: ShreddedColumn, plan: ColumnPlan, indices: np.ndarray, width: int, gzip: bool) -> tuple[bytes, int]:
-    """Data page of dictionary indices: [u8 bit width][RLE/bit-packed
-    hybrid] with RLE_DICTIONARY encoding — the engine's own hybrid coder
-    (kernels/rle.py) IS the wire format."""
-    body = _levels_block(sh, plan)
-    body += bytes([width])
-    body += rle.encode_hybrid(indices, width)
-    dph = tc.struct(
-        tc.f_i32(1, sh.num_entries),
-        tc.f_i32(2, _ENC_RLE_DICT),
-        tc.f_i32(3, _ENC_RLE),
-        tc.f_i32(4, _ENC_RLE),
-    )
-    return _page(_PAGE_DATA, body, dph, 5, gzip)
 
 
 def _split_pages(sh: ShreddedColumn, plan: ColumnPlan, max_records: int) -> list[tuple[ShreddedColumn, int, int]]:
@@ -594,79 +548,36 @@ class ParquetWriter:
                     num_entries=sh.num_entries,
                 )
             # dictionary-encode when the chunk is meaningfully repetitive
-            denc = None
+            split = None
             if self.use_dictionary and not use_int96 and plan.physical != "BOOLEAN" and len(sh.values):
-                try:
-                    d = sh.values.dictionary_encode()
-                except pa.lib.ArrowError:  # pragma: no cover - defensive
-                    d = None
-                if d is not None and len(d.dictionary) <= max(1, len(sh.values) // 2):
-                    denc = d
-            encodings = [_ENC_PLAIN, _ENC_RLE]
+                split = dictionary_split(sh.values)
+                if len(split[0]) > max(1, len(sh.values) // 2):
+                    split = None
             dict_offset = None
             chunk_len = 0
             raw_len = 0  # uncompressed bytes (ColumnMetaData field 6)
-            pages = _split_pages(sh, plan, self.page_records)
-            if denc is not None:
-                dict_page, dict_raw = _dictionary_page(denc.dictionary, plan.physical, self.gzip)
+            if split is not None:
+                dictionary, indices, width = split
+                dict_page, raw_len = _dictionary_page(dictionary, plan.physical, self.gzip)
                 dict_offset = self._pos
                 self._f.write(dict_page)
-                chunk_len += len(dict_page)
-                raw_len += dict_raw
-                data_offset = self._pos + chunk_len
-                indices = np.asarray(denc.indices, dtype=np.uint64)
-                width = max((len(denc.dictionary) - 1).bit_length(), 1)
-                for page_sh, v0, v1 in pages:
-                    if self.data_page_version == 2:
-                        vbody = bytes([width]) + rle.encode_hybrid(indices[v0:v1], width)
-                        page, raw = _data_page_v2(page_sh, plan, vbody, _ENC_RLE_DICT, self.gzip)
-                    else:
-                        page, raw = _dict_data_page(page_sh, plan, indices[v0:v1], width, self.gzip)
-                    self._f.write(page)
-                    chunk_len += len(page)
-                    raw_len += raw
-                encodings.append(_ENC_RLE_DICT)
+                chunk_len = len(dict_page)
+                enc = _ENC_RLE_DICT
+                encodings = [_ENC_PLAIN, _ENC_RLE, _ENC_RLE_DICT]
             else:
-                enc = _ENC_PLAIN
-                if self.use_delta and not use_int96 and plan.physical == "BYTE_ARRAY":
-                    enc = _ENC_DELTA_LENGTH_BA
-                    encodings = [_ENC_DELTA_LENGTH_BA, _ENC_RLE]
-                elif self.use_delta and not use_int96 and plan.physical in ("INT32", "INT64"):
-                    # DELTA_BINARY_PACKED for signed int / temporal
-                    # chunks when it actually beats PLAIN (spec
-                    # Encodings.md; unsigned columns stay PLAIN — their
-                    # raw bit patterns don't fit signed delta space)
-                    from cpp_parquet_spark.kernels.deltabp import (
-                        delta_bp_fits,
-                        encode_delta_binary_packed_array,
-                    )
-
-                    vt2 = sh.values.type
-                    signed_like = (
-                        pa.types.is_signed_integer(vt2)
-                        or pa.types.is_timestamp(vt2)
-                        or pa.types.is_date32(vt2)
-                    )
-                    if signed_like and len(sh.values) and delta_bp_fits(sh.values):
-                        # decide on a bounded contiguous sample: trial-
-                        # encoding the whole chunk doubled the encode
-                        # cost of every delta column (pages re-encode
-                        # the same values right below)
-                        sample = sh.values.slice(0, min(len(sh.values), 8192))
-                        plain_bytes = len(sample) * (4 if plan.physical == "INT32" else 8)
-                        if len(encode_delta_binary_packed_array(sample)) < 0.9 * plain_bytes:
-                            enc = _ENC_DELTA_BP
-                            encodings = [_ENC_DELTA_BP, _ENC_RLE]
-                data_offset = self._pos
-                for page_sh, _, _ in pages:
-                    if self.data_page_version == 2:
-                        vbody = _page_values(page_sh, plan, enc, use_int96)
-                        page, raw = _data_page_v2(page_sh, plan, vbody, enc, self.gzip)
-                    else:
-                        page, raw = _data_page(page_sh, plan, int96=use_int96, gzip=self.gzip, encoding=enc)
-                    self._f.write(page)
-                    chunk_len += len(page)
-                    raw_len += raw
+                enc = self._value_encoding(sh, use_int96)
+                encodings = [enc, _ENC_RLE]
+            data_offset = self._pos + chunk_len
+            framer = _data_page_v2 if self.data_page_version == 2 else _data_page
+            for page_sh, v0, v1 in _split_pages(sh, plan, self.page_records):
+                if split is not None:
+                    vbody = bytes([width]) + encode_hybrid(indices[v0:v1], width)
+                else:
+                    vbody = _page_values(page_sh, enc, use_int96)
+                page, raw = framer(page_sh, vbody, enc, self.gzip)
+                self._f.write(page)
+                chunk_len += len(page)
+                raw_len += raw
             self._pos += chunk_len
             total += chunk_len
             stats = None if use_int96 else _statistics(sh, plan)
@@ -692,6 +603,27 @@ class ParquetWriter:
         )
         self._row_groups.append(rg)
         self._num_rows += n_rows
+
+    def _value_encoding(self, sh: ShreddedColumn, use_int96: bool) -> int:
+        """Encoding of a non-dictionary chunk's values."""
+        physical = sh.plan.physical
+        if not self.use_delta or use_int96:
+            return _ENC_PLAIN
+        if physical == "BYTE_ARRAY":
+            return _ENC_DELTA_LENGTH_BA
+        vt = sh.values.type
+        signed_like = pa.types.is_signed_integer(vt) or pa.types.is_timestamp(vt) or pa.types.is_date32(vt)
+        if physical in ("INT32", "INT64") and signed_like and len(sh.values):
+            # DELTA_BINARY_PACKED for signed int / temporal chunks when
+            # it actually beats PLAIN (spec Encodings.md; unsigned
+            # columns stay PLAIN — their raw bit patterns are not signed
+            # values).  Decide on a bounded contiguous sample: trial-
+            # encoding the whole chunk doubled the encode cost of every
+            # delta column (pages re-encode the same values)
+            sample = physical_np(sh.values.slice(0, 8192), physical)
+            if len(encode_delta_binary_packed(sample)) < 0.9 * sample.nbytes:
+                return _ENC_DELTA_BP
+        return _ENC_PLAIN
 
     def close(self) -> dict:
         footer = tc.struct(

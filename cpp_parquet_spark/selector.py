@@ -19,7 +19,7 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 
-from cpp_parquet_spark.kernels.plain import plain_size
+from cpp_parquet_spark.kernels.plain import fixed_np, plain_size
 from cpp_parquet_spark.kernels.rle_runs import run_count
 
 _SAMPLE_ROWS = 2048
@@ -74,20 +74,9 @@ def column_stats(values: pa.Array, physical: str) -> ColumnStats:
         return ColumnStats(n, card, runs, avg_len, entropy, 0, avg_nl, False, distinct_bytes)
     sorted_prefix = False
     if physical in ("INT32", "INT64"):
-        t = sample
-        if pa.types.is_date(t.type):  # no direct date32->int64 cast in pyarrow 16
-            t = t.cast(pa.int32()).cast(pa.int64())
-        elif pa.types.is_timestamp(t.type):
-            t = t.cast(pa.int64())
-        mm = pc.min_max(t)
-        lo, hi = mm["min"].as_py(), mm["max"].as_py()
-        range_bits = int(hi - lo).bit_length() if hi is not None else 0
-        prefix = values.slice(0, min(n, _SAMPLE_ROWS))
-        if pa.types.is_date(prefix.type):
-            prefix = prefix.cast(pa.int32()).cast(pa.int64())
-        elif pa.types.is_timestamp(prefix.type):
-            prefix = prefix.cast(pa.int64())
-        pv = np.asarray(prefix)
+        t = fixed_np(sample)
+        range_bits = (int(t.max()) - int(t.min())).bit_length()
+        pv = fixed_np(values.slice(0, min(n, _SAMPLE_ROWS)))
         sorted_prefix = bool(len(pv) > 2 and (np.diff(pv) >= 0).all())
     return ColumnStats(n, card, runs, avg_len, entropy, range_bits, avg_nl, sorted_prefix)
 

@@ -1,0 +1,97 @@
+"""Byte-exact pins of the two write paths.
+
+A fixed table goes through ``write_table`` (every page/encoding switch)
+and through ``serialize_chunk`` (every integer/generic SGC codec); the
+sha256 of each output is compared with digests recorded from a known-good
+build.  Refactors of the encoders must keep these digests: a change here
+is a format change.  Uncompressed only (zlib output may vary by library
+version).
+"""
+
+import datetime as dt
+import hashlib
+import itertools
+
+import pyarrow as pa
+import pytest
+
+from cpp_parquet_spark.chunk import serialize_chunk
+from cpp_parquet_spark.kernels.levels import shred
+from cpp_parquet_spark.parquet_writer import write_table
+from cpp_parquet_spark.schema_plan import plan_from_schema
+
+_N = 1000
+
+
+def _table() -> pa.Table:
+    i = range(_N)
+    day0 = dt.date(2020, 1, 1)
+    ts0 = dt.datetime(2026, 1, 1)
+    return pa.table(
+        {
+            "id": pa.array([10**12 + 3 * k for k in i], pa.int64()),
+            "i32": pa.array([(k * 7919) % 65536 - 32768 for k in i], pa.int32()),
+            "small": pa.array([None if k % 7 == 0 else k % 5 for k in i], pa.int32()),
+            "d": pa.array([day0 + dt.timedelta(days=k // 3) for k in i], pa.date32()),
+            "ts": pa.array([ts0 + dt.timedelta(microseconds=1_000_003 * k) for k in i], pa.timestamp("us")),
+            "s": pa.array([None if k % 11 == 0 else f"name-{k % 40}" for k in i], pa.string()),
+            "u": pa.array([f"u{k * 13}" for k in i], pa.string()),
+            "f": pa.array([k * 0.25 for k in i], pa.float64()),
+            "xs": pa.array(
+                [None if k % 9 == 0 else [k + j for j in range(k % 4)] for k in i],
+                pa.list_(pa.int32()),
+            ),
+        }
+    )
+
+
+_WRITE_DIGESTS = {
+    # (data_page_version, use_dictionary, use_delta) -> sha256 of the file
+    (1, True, True): "f66025831b9b5962c953b70c0e53e731cdf2057e9754b5f2a37696f80024ed7f",
+    (1, True, False): "f4d7f722c6cff41501b9c6e01f095710b36afd93032b77c1722800b8a3fe6be1",
+    (1, False, True): "d3a1a4a64cd26501d08d8622eb744eb3107d2d7df1e6435aa452766a00f23cb5",
+    (1, False, False): "9424e42ff4eb038b32aad1135813b61236aa8ddcd02f210cbaf867f2a279d3d3",
+    (2, True, True): "db05926140e402afb83909ce6fad5e554cc3f985c5dd424db646ea0fe878e997",
+    (2, True, False): "f8ce57aee0d937db2fcc63102c97a697e1937e0c9b8cc5e60cb7d3f680e2af8f",
+    (2, False, True): "b5db2c81ed687b2aec5addbd742bc5a1cd7f5c447c85079cbb7169b9e1039e77",
+    (2, False, False): "0315c3a732360cc31cb0c418fcd570fe8834b69000c272b7affe8e2b79d5c4a5",
+}
+
+_CHUNK_DIGESTS = {
+    # codec -> sha256 over every applicable column's payload, in schema order
+    "plain": "b8624a7ad92382bb61430ce16e7084d9444d0086e000dc8689fa7ca0c1fa4223",
+    "for": "f1c68c7dcea8345e11a0352ac49d2a38910c579f7dfe5ef9bf41b39f26c29587",
+    "delta": "2f6c80b5c5c59b5e074ceb38ac693b37b07ce3e18eeb5b6f87fb91d7a7c55f21",
+    "dict": "75304ef3897998f90e80d9a588646fafe7d1b019f3385560d6b3853ec2a9783d",
+    "rle": "ae9fff6c12b92d216a482bc8c95f8e0eaad9e35be6efb318d3cbfed2baab0230",
+}
+
+
+@pytest.mark.parametrize(
+    "version,use_dict,use_delta", list(itertools.product((1, 2), (True, False), (True, False)))
+)
+def test_write_table_bytes_pinned(version, use_dict, use_delta, tmp_path):
+    path = tmp_path / "t.parquet"
+    write_table(
+        _table(),
+        str(path),
+        use_dictionary=use_dict,
+        use_delta=use_delta,
+        page_records=300,  # several pages; delta blocks end part-filled
+        data_page_version=version,
+    )
+    digest = hashlib.sha256(path.read_bytes()).hexdigest()
+    assert digest == _WRITE_DIGESTS[(version, use_dict, use_delta)]
+
+
+@pytest.mark.parametrize("codec", ["plain", "for", "delta", "dict", "rle"])
+def test_serialize_chunk_bytes_pinned(codec):
+    t = _table()
+    h = hashlib.sha256()
+    for plan in plan_from_schema(t.schema):
+        if codec in ("for", "delta") and plan.physical not in ("INT32", "INT64"):
+            continue
+        sh = shred(t.column(plan.path[0]).combine_chunks(), plan)
+        blob, _ = serialize_chunk(sh, codec)
+        h.update(blob)
+    assert h.hexdigest() == _CHUNK_DIGESTS[codec]

@@ -6,7 +6,7 @@ import math
 
 import pyarrow as pa
 import pyarrow.parquet as pq
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from cpp_parquet_spark.parquet_writer import write_table
@@ -112,14 +112,30 @@ def test_random_tables_roundtrip_v2_pages(t, rg, gzip, use_dict, tmp_path_factor
         assert got == want, name
 
 
+def _mixed_width_block() -> list[int]:
+    """One DELTA_BINARY_PACKED block whose four miniblocks pack at widths
+    0, 1, 33 and 64, the last one part-filled: 32+32+32+16 deltas above
+    the block's min delta -2**63, chained into int64 values with
+    wrap-around."""
+    lo = -(2**63)
+    deltas = [lo] * 32 + [lo + i % 2 for i in range(32)] + [lo + (i * 2**32 + i) % 2**33 for i in range(32)]
+    deltas += [lo + (2**64 - 1 if i == 5 else i) for i in range(16)]
+    vals = [7]
+    for d in deltas:
+        vals.append((vals[-1] + d + 2**63) % 2**64 - 2**63)
+    return vals
+
+
 @settings(max_examples=25, deadline=None)
 @given(
     vals=st.lists(
-        st.one_of(st.none(), st.integers(min_value=-(2**62) + 1, max_value=2**62 - 1)),
+        st.one_of(st.none(), st.integers(min_value=-(2**63), max_value=2**63 - 1)),
         max_size=300,
     ),
     v2=st.booleans(),
 )
+@example(vals=_mixed_width_block(), v2=False)
+@example(vals=_mixed_width_block(), v2=True)
 def test_random_ints_delta_binary_packed(vals, v2, tmp_path_factory):
     """Random nullable int64 columns through the DELTA_BINARY_PACKED
     eligibility gate (delta or PLAIN, whichever the size heuristic

@@ -414,6 +414,24 @@ def test_delta_binary_packed_int_pages(tmp_path):
     assert os.path.getsize(p_delta) < os.path.getsize(p_plain)
 
 
+def test_delta_binary_packed_int32_wraps(tmp_path):
+    """INT32 deltas wrap in 32 bits (spec Encodings.md): a jump to
+    2**31-1 and then to -2**31 inside one 128-value block has deltas
+    2**31-1 and -(2**32-1), which only fit a miniblock of at most 32 bits
+    when computed modulo 2**32.  Both readers must get the values back."""
+    vals = [1000 + 3 * i for i in range(500)]
+    vals[200:203] = [0, 2**31 - 1, -(2**31)]
+    vals[300:303] = [-(2**31), 2**31 - 1, -(2**31)]
+    t = pa.table({"v": pa.array(vals, pa.int32())})
+    for version in (1, 2):
+        p = str(tmp_path / f"wrap{version}.parquet")
+        write_table(t, p, use_dictionary=False, data_page_version=version)
+        assert "DELTA_BINARY_PACKED" in pq.ParquetFile(p).metadata.row_group(0).column(0).encodings
+        assert pq.read_table(p).column("v").to_pylist() == vals
+        got = [r[0] for r in duckdb.sql(f"select v from '{p}'").fetchall()]
+        assert got == vals
+
+
 def test_delta_binary_packed_nulls_and_pages(tmp_path):
     """DELTA_BINARY_PACKED composes with def levels (nulls) and
     multi-page chunks."""
