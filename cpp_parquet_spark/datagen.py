@@ -11,9 +11,9 @@ with columns (repo, path, commit, lang, content) — BASELINE.json
 * :func:`synthetic_source_repos` — deterministic at-scale expansion
   built entirely from JVM-side expressions (``xxhash64`` of the row id;
   no ``rand()``, no Python), used by the benchmark.  Zipf-skewed repos
-  (repo 0 owns ~30% of rows, exercising the salting path), 12 skewed
-  languages, FSST-friendly slash paths, per-language repetitive content
-  64–8k chars.
+  (repo 0 owns ~30% of rows, a skewed key the range layout splits), 12
+  skewed languages, FSST-friendly slash paths, per-language repetitive
+  content 64–8k chars.
 
 Everything is a lazy DataFrame; nothing collects.
 """

@@ -5,19 +5,22 @@ This is the Spark equivalent of the reference's writer lifecycle
 and flushes once (parquet-file.cc:118-177), this engine expresses the
 same ingest → shred → encode → serialize dataflow as
 
-    df.repartition(N, lang, repo, salt)          # explicit shuffle
-      .mapInArrow(encode_batches, CHUNK_SCHEMA)  # vectorized encoders
+    df.repartitionByRange(N, lang, repo, row_hash)  # explicit shuffle
+      .mapInArrow(encode_batches, CHUNK_SCHEMA)     # vectorized encoders
 
 with every per-value operation inside numpy/Arrow kernels — no per-row
 Python (input_hint).  Decoding is the inverse mapInArrow over chunk
 rows grouped per (part_id, chunk_id).
 
 Scale notes (designed for ~100 TB / 1000 executors, tested local[32]):
-* the only full-data shuffle is the explicit repartition; its key set
-  (lang, repo, salt) is what makes rle/dict win on lang/repo columns
-  downstream, so the shuffle buys compression;
-* skewed repos are salted: a cheap combine-side (lang, repo) count
-  finds keys above the target partition size and splits them;
+* the only full-data shuffle is the explicit range repartition; each
+  partition holds a narrow (lang, repo) range, which is what makes
+  rle/dict win on lang/repo columns and keeps chunk stats prunable, so
+  the shuffle buys compression;
+* skewed keys split without a separate job: ``row_hash`` (xxhash64 of
+  the non-key columns) is the last sort key, so the range partitioner's
+  sampled bounds can fall inside a heavy key.  The bounds balance rows,
+  not bytes;
 * chunk rows are bounded (``chunk_rows``) so executor memory per task
   is bounded regardless of input size;
 * chunk metadata (one row per column chunk) is ~6 rows per 64k input
@@ -34,9 +37,11 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
+    ArrayType,
     BinaryType,
     IntegerType,
     LongType,
+    MapType,
     StringType,
     StructField,
     StructType,
@@ -543,166 +548,49 @@ def _prune_condition(chunks: DataFrame, schema: StructType, column: str, lower=N
     return pred & (F.col("stat_min").isNull() | range_ok)
 
 
-def _row_bytes_expr(df: DataFrame):
-    """Cheap per-row PLAIN-ish byte estimate (JVM expressions only) for
-    the bytes-aware salting in :func:`partition_for_encoding`.  Var-
-    length columns count 4+octet_length (the reference's BYTE_ARRAY
-    accounting, parquet-column.cc:367-381); fixed-width types their
-    width; complex types a token constant (the rows-based target still
-    guards them)."""
-    from pyspark.sql import types as T
+def row_hash(df: DataFrame, keys: tuple[str, ...]):
+    """xxhash64 over the columns of ``df`` that are not in ``keys``: the
+    salt that spreads one heavy key over several partitions.  Columns
+    holding a MAP are left out, because Spark refuses to hash maps
+    (DATATYPE_MISMATCH.HASH_MAP_TYPE); for a table without maps this
+    is the expression chunk stores were always partitioned by, so
+    their part ids stay the same."""
 
-    exprs = []
-    for f in df.schema.fields:
-        dt = f.dataType
-        if isinstance(dt, (T.StringType, T.BinaryType)):
-            exprs.append(F.lit(4) + F.coalesce(F.octet_length(F.col(f.name)), F.lit(0)))
-        elif isinstance(dt, (T.LongType, T.DoubleType, T.TimestampType, T.TimestampNTZType)):
-            exprs.append(F.lit(8))
-        elif isinstance(dt, (T.IntegerType, T.FloatType, T.DateType, T.ShortType)):
-            exprs.append(F.lit(4))
-        elif isinstance(dt, (T.BooleanType, T.ByteType)):
-            exprs.append(F.lit(1))
-        else:
-            exprs.append(F.lit(16))
-    total = exprs[0]
-    for e in exprs[1:]:
-        total = total + e
-    return total.cast("long")
+    def has_map(dt) -> bool:
+        if isinstance(dt, MapType):
+            return True
+        if isinstance(dt, ArrayType):
+            return has_map(dt.elementType)
+        if isinstance(dt, StructType):
+            return any(has_map(f.dataType) for f in dt.fields)
+        return False
+
+    others = [f.name for f in df.schema.fields if f.name not in keys and not has_map(f.dataType)]
+    return F.xxhash64(*[F.col(c) for c in others] or [F.lit(0)])
 
 
 def partition_for_encoding(
     df: DataFrame,
     keys: tuple[str, ...] = ("lang", "repo"),
     num_partitions: int | None = None,
-    target_rows: int = 1 << 20,
-    salt: bool = True,
 ) -> DataFrame:
-    """Explicit repartition by the encoding keys, salting skewed keys.
+    """Range-partition ``df`` by the encoding keys, with the row hash
+    (:func:`row_hash`) as the last sort key.
 
-    The (lang, repo) clustering is what makes the rle/dict codecs win on
-    those columns; ``salt`` splits any key owning more than
-    ``target_rows`` rows (north-rule skew handling) using a cheap
-    map-side-combined count that only collects the skewed keys.
+    Each partition then holds one narrow range of keys, which is what
+    makes rle/dict win on the key columns and keeps chunk min/max stats
+    tight enough for :func:`prune_chunks` to skip chunks.  Spark's own
+    sampled range partitioner places the bounds when the shuffle runs;
+    because the row hash breaks ties, a bound can fall inside a heavy
+    key, so a skewed key is split over as many partitions as its share
+    of the rows needs.  Keys are compared as typed values, so boolean,
+    double and NULL keys split like strings do.
 
-    Round-6 (guide §2.5): skew is detected by *bytes* as well as rows.
-    The same sample job additionally estimates per-key and total row
-    bytes (one rollup — still a single two-stage job), and any key
-    whose estimated bytes exceed the per-partition byte budget
-    ``clamp(total_bytes / num_partitions, 4 MB, 1 GB)`` is split to
-    that budget.  The rows-only rule never fired below ~10^6-row keys,
-    so a single 20-MB repo serialized a whole encode stage behind one
-    straggler task (measured: max/median partition bytes 7x at sf0.1).
-    The budget adapts to input size and partition count rather than a
-    constant tuned for either local mode or the cluster; splitting
-    keeps each salt bucket's rows on one key, so dict/rle clustering
-    within buckets is preserved.
-
-    Known sampling limitation: detection rides the row-count sampling
-    fraction, so a key that is byte-heavy but row-LIGHT (a handful of
-    near-budget-sized rows) can be missed by the sample entirely —
-    per-key byte totals are unknowable without reading lengths, and
-    the fraction is sized for the row target.  Such rows also exceed
-    chunk/Arrow batch sizing assumptions elsewhere; a dedicated
-    giant-row pre-filter would be the fix if such data appears.
+    Limit: the bounds balance rows, not bytes.  A key of a few very
+    large rows lands in one partition whatever its size.
     """
-    spark = df.sparkSession
-    num = num_partitions or spark.sparkContext.defaultParallelism * 2
-    key_cols = [F.col(k) for k in keys]
-    salt_col = F.lit(0)
-    if salt:
-        # skew detection on a deterministic sample: at 100 TB a full
-        # count is a whole extra input scan; a 1% sample finds every
-        # key that matters (a key owning >target_rows rows appears
-        # >target_rows/100 times in the sample w.h.p.)
-        frac = min(1.0, max(0.001, 100.0 / max(target_rows, 1)))
-        # collection flood control: only keys whose *sampled* bytes
-        # could plausibly exceed the lowest possible budget are
-        # collected.  The pre-job budget guess uses the optimizer's
-        # size estimate (compressed file bytes — an underestimate, so
-        # the filter only over-collects by the compression ratio,
-        # bounded at O(num_partitions) keys).
-        try:
-            plan_bytes = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-        except Exception:  # noqa: BLE001 - stats are a best-effort hint
-            plan_bytes = 0
-        if plan_bytes >= 1 << 60:
-            # missing statistics surface as the defaultSizeInBytes
-            # sentinel (Long.MaxValue-ish); treating it as a real size
-            # would push the collection filter past every key and
-            # silently disable byte salting
-            plan_bytes = 0
-        # cap at 2 GB: the salt budget itself is capped at 1 GB, so a
-        # key above budget always samples past floor*frac*0.5 and is
-        # collected even when the stats overestimate
-        collect_floor = min(max(4 << 20, plan_bytes // max(num * 4, 1)), 2 << 30)
-        gid_all = (1 << len(keys)) - 1
-        agg_rows = (
-            df.sample(fraction=frac, seed=42)
-            .rollup(*keys)
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(_row_bytes_expr(df)).alias("b"),
-                F.grouping_id().alias("gid"),
-            )
-            .filter(
-                (F.col("gid") == gid_all)
-                | (
-                    (F.col("gid") == 0)
-                    & (
-                        (F.col("n") > int(target_rows * frac * 0.5))
-                        | (F.col("b") > int(collect_floor * frac * 0.5))
-                    )
-                )
-            )
-            .collect()
-        )
-        total_bytes_est = next(
-            (int((r["b"] or 0) / frac) for r in agg_rows if r["gid"] == gid_all), 0
-        )
-        budget = min(max(total_bytes_est // max(num, 1), 4 << 20), 1 << 30)
-        skewed: list[tuple[tuple[str, ...], int]] = []
-        for r in agg_rows:
-            if r["gid"] != 0:
-                continue
-            est_rows = int(r["n"] / frac)
-            est_bytes = int((r["b"] or 0) / frac)
-            salt_n = max(-(-est_rows // target_rows), -(-est_bytes // budget))
-            if salt_n > 1:
-                skewed.append(
-                    (
-                        tuple("\x00<NULL>" if r[k] is None else str(r[k]) for k in keys),
-                        salt_n,
-                    )
-                )
-        if skewed:
-            # NULL-safe key text on BOTH sides: concat_ws silently drops
-            # NULL columns, so a skewed NULL-keyed group would build a
-            # "None" mapping entry the JVM lookup never produces (and a
-            # key literally named "None" would collide with it) — use an
-            # explicit NULL token via coalesce instead (round-6 review)
-            mapping = F.create_map(
-                *[
-                    x
-                    for key_strs, sn in skewed
-                    for x in (F.lit("\x1f".join(key_strs)), F.lit(sn))
-                ]
-            )
-            salt_n_col = F.coalesce(
-                mapping[
-                    F.concat_ws(
-                        "\x1f",
-                        *[
-                            F.coalesce(F.col(k).cast("string"), F.lit("\x00<NULL>"))
-                            for k in keys
-                        ],
-                    )
-                ],
-                F.lit(1),
-            )
-            others = [c for c in df.columns if c not in keys]
-            salt_col = F.pmod(F.xxhash64(*[F.col(c) for c in others] or [F.lit(0)]), salt_n_col)
-    return df.repartition(num, *key_cols, salt_col)
+    num = num_partitions or df.sparkSession.sparkContext.defaultParallelism * 2
+    return df.repartitionByRange(num, *keys, row_hash(df, keys))
 
 
 def encode_pipeline(
@@ -711,22 +599,22 @@ def encode_pipeline(
     keys: tuple[str, ...] = ("lang", "repo"),
     num_partitions: int | None = None,
     chunk_rows: int = DEFAULT_CHUNK_ROWS,
-    salt: bool = True,
-    presample: bool = True,
     codec_hints: dict[str, str] | None = None,
 ) -> DataFrame:
-    """repartition-by-(lang, repo, salt) → encode: the flagship path.
+    """Range-partition by ``keys`` (:func:`partition_for_encoding`), then
+    encode: the flagship path.
 
-    ``presample`` runs the codec selector once driver-side and seeds
-    every task with the result (see :func:`presample_codecs`); pass
-    ``codec_hints`` directly to reuse hints across multiple runs over
-    the same data (the hints are a driver-side constant — compute once,
-    encode for hours)."""
+    With ``codec == "auto"`` and no ``codec_hints``, the codec selector
+    runs once driver-side on a prefix sample and seeds every task with
+    the result (see :func:`presample_codecs`).  Pass ``codec_hints`` to
+    reuse hints across runs over the same data (the hints are a
+    driver-side constant: compute once, encode for hours); then no
+    Spark job runs until the caller's action."""
     hints = codec_hints if codec_hints is not None else (
-        presample_codecs(df) if presample and codec == "auto" else None
+        presample_codecs(df) if codec == "auto" else None
     )
     return encode_dataframe(
-        partition_for_encoding(df, keys=keys, num_partitions=num_partitions, salt=salt, target_rows=max(chunk_rows * 4, 1 << 18)),
+        partition_for_encoding(df, keys=keys, num_partitions=num_partitions),
         codec=codec,
         chunk_rows=chunk_rows,
         codec_hints=hints,

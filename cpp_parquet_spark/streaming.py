@@ -47,7 +47,6 @@ def encode_stream(
             codec=job.codec,
             chunk_rows=job.chunk_rows,
             snapshot_id=f"{job.snapshot_id}-b{batch_id}",
-            salt_target_rows=job.salt_target_rows,
         )
         batch_job.run(batch_df)
 

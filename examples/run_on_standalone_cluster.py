@@ -7,7 +7,7 @@ end-to-end:
 
 Starts a master + N one-core worker JVMs (each executor gets its own
 JVM, GC, shuffle server, and Python workers), ships the engine package
-to them as a zip via spark.submit.pyFiles, runs the salted-repartition
+to them as a zip via spark.submit.pyFiles, runs the range-partitioned
 auto-codec encode over the sf documents table, prints the compression
 report, and tears the cluster down.
 """

@@ -81,19 +81,74 @@ def test_encode_pipeline_partitions_and_salts(spark, sf_small):
     assert decoded.count() == src.count()
 
 
-def test_partition_for_encoding_salting(spark):
-    # skewed synthetic input: repo 0 owns ~30% of rows
-    df = synthetic_source_repos(spark, 20000, parts=4)
-    out = partition_for_encoding(df, num_partitions=8, target_rows=2000)
-    # the skewed (lang, repo) keys must be split across >1 partition
+@pytest.mark.parametrize("kind", ["string", "boolean", "double"])
+def test_partition_for_encoding_salting(spark, kind):
+    if kind == "string":
+        # skewed synthetic input: repo 0 owns ~30% of rows
+        df = synthetic_source_repos(spark, 20000, parts=4)
+        out = partition_for_encoding(df, num_partitions=8)
+        key = "repo"
+    else:
+        # one value of a typed key owns 90% of the rows
+        hot = F.col("id") % 10 != 0
+        k = hot if kind == "boolean" else F.when(hot, F.lit(0.5)).otherwise(F.col("id").cast("double"))
+        df = spark.range(0, 20000, 1, 4).select(
+            k.alias("k"), F.sha2(F.col("id").cast("string"), 256).alias("v")
+        )
+        out = partition_for_encoding(df, keys=("k",), num_partitions=8)
+        key = "k"
+    # the skewed keys must be split across >1 partition
     parts_per_key = (
         out.withColumn("pid", F.spark_partition_id())
-        .groupBy("repo")
+        .groupBy(key)
         .agg(F.countDistinct("pid").alias("nparts"), F.count("*").alias("cnt"))
         .filter(F.col("cnt") > 4000)
         .collect()
     )
+    assert parts_per_key
     assert all(r["nparts"] > 1 for r in parts_per_key), parts_per_key
+    # no rows lost or duplicated
+    assert out.count() == 20000
+    assert out.exceptAll(df).count() == 0
+
+
+def test_encode_pipeline_plan_is_one_range_exchange(spark):
+    """With codec hints, encode_pipeline builds its plan without running
+    a Spark job (the range partitioner samples inside the caller's
+    action), and the plan holds one shuffle: the range repartition."""
+    df = synthetic_source_repos(spark, 2000, parts=2)
+    sc = spark.sparkContext
+    sc.setJobGroup("encode-pipeline-plan", "plan only")
+    try:
+        chunks = encode_pipeline(df, num_partitions=4, codec_hints={"lang": "dict"})
+        assert list(sc.statusTracker().getJobIdsForGroup("encode-pipeline-plan")) == []
+        plan = chunks._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("Exchange rangepartitioning") == 1, plan
+        assert plan.count("Exchange ") == 1, plan
+        assert chunks.agg(F.sum("num_rows")).collect()[0][0] == 2000 * len(df.columns)
+        assert list(sc.statusTracker().getJobIdsForGroup("encode-pipeline-plan"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def test_range_layout_prunes_repo_chunks(spark):
+    """Range partitions hold narrow (lang, repo) ranges, so the chunk
+    stats of a repo-equality predicate rule out some chunks; under a
+    hash layout every chunk spans every repo and all are kept."""
+    from cpp_parquet_spark.engine import prune_chunks
+
+    df = synthetic_source_repos(spark, 20000, parts=4)
+    chunks = encode_pipeline(df, num_partitions=8).cache()
+    repo = "org7/repo107"  # one of the 199 equally popular repos
+    pruned = prune_chunks(chunks, df.schema, "repo", lower=repo, upper=repo)
+    n_all = chunks.select("part_id", "chunk_id").distinct().count()
+    n_kept = pruned.select("part_id", "chunk_id").distinct().count()
+    assert 0 < n_kept < n_all, (n_kept, n_all)
+    got = decode_dataframe(pruned, df.schema).filter(F.col("repo") == repo)
+    exp = df.filter(F.col("repo") == repo)
+    assert exp.count() > 0
+    assert got.exceptAll(exp).count() == 0 and exp.exceptAll(got).count() == 0
+    chunks.unpersist()
 
 
 def test_synthetic_deterministic(spark):
@@ -474,9 +529,8 @@ def test_decode_grouped_window_prune_matches_semi_join(spark):
 
 
 def test_partition_for_encoding_bytes_salting(spark):
-    """Round-6: a key well under the rows target but over the
-    per-partition BYTE budget (one fat repo) must be salted across >1
-    partition, and the split must not lose or duplicate rows."""
+    """Round-6: one fat repo (half the rows, ~60 MB) must be split
+    across >1 partition, and the split must not lose or duplicate rows."""
     big = spark.range(0, 3000).select(
         F.lit("py").alias("lang"),
         F.lit("megarepo").alias("repo"),
@@ -493,7 +547,7 @@ def test_partition_for_encoding_bytes_salting(spark):
         F.lit("tiny").alias("content"),
     )
     df = big.unionByName(small)
-    out = partition_for_encoding(df, num_partitions=8, target_rows=1 << 20)
+    out = partition_for_encoding(df, num_partitions=8)
     stats = (
         out.withColumn("pid", F.spark_partition_id())
         .groupBy("repo")
@@ -501,7 +555,7 @@ def test_partition_for_encoding_bytes_salting(spark):
         .collect()
     )
     by_repo = {r["repo"]: r for r in stats}
-    # 60 MB >> budget clamp floor (4 MB): megarepo must be split
+    # megarepo holds half the rows of 8 range partitions: it must be split
     assert by_repo["megarepo"]["nparts"] > 1, stats
     # no rows lost or duplicated by the salting
     assert sum(r["cnt"] for r in stats) == 6000

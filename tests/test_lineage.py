@@ -319,3 +319,43 @@ def test_concurrent_commit_detected_before_publish(spark, workdir):
     assert _store_files(winner) == store_before  # no staged file was placed
     _assert_decodes_exactly(spark, winner, src)
     assert not [n for n in os.listdir(workdir) if n.startswith("staging-")]
+
+
+def test_with_part_ids_unchanged_for_map_free_tables(spark, sf_small, workdir):
+    """Resume re-derives part ids, so the salted hash must stay the
+    expression earlier stores were written with."""
+    df = spark.read.parquet(f"{sf_small}/lineitem.parquet")
+    keys = ("l_returnflag", "l_linestatus")
+    job = EncodeJob(workdir, num_parts=8, keys=keys)
+    others = [c for c in df.columns if c not in keys]
+    salt = F.pmod(F.xxhash64(*[F.col(c) for c in others]), F.lit(64))
+    expected = F.pmod(F.xxhash64(*[F.col(k) for k in keys], salt), F.lit(8)).cast("int")
+    rows = job.with_part(df).select((F.col("_part") == expected).alias("same")).collect()
+    assert rows and all(r["same"] for r in rows)
+
+
+def test_map_column_roundtrips_through_both_layouts(spark, workdir):
+    """Spark refuses to hash MAP columns, so the row hash behind both the
+    EncodeJob part id and the range layout's tiebreak leaves them out."""
+    from cpp_parquet_spark.engine import decode_dataframe, encode_pipeline
+
+    src = spark.range(0, 3000, 1, 2).select(
+        F.when(F.col("id") % 10 != 0, F.lit("python")).otherwise(F.lit("go")).alias("lang"),
+        F.concat(F.lit("r"), (F.col("id") % 3).cast("string")).alias("repo"),
+        F.col("id"),
+        F.when(
+            F.col("id") % 7 != 0,
+            F.create_map(F.lit("n"), (F.col("id") % 5).cast("int"), F.lit("m"), F.lit(1)),
+        ).alias("attrs"),
+    )
+    assert src.schema["attrs"].dataType.simpleString() == "map<string,int>"
+    exp = {r["id"]: r for r in src.collect()}
+
+    job = EncodeJob(workdir, num_parts=4, chunk_rows=512)
+    job.run(src)
+    got = {r["id"]: r for r in job.decode(spark, src.schema).collect()}
+    assert got == exp
+
+    chunks = encode_pipeline(src, num_partitions=4, chunk_rows=512)
+    got = {r["id"]: r for r in decode_dataframe(chunks, src.schema).collect()}
+    assert got == exp
