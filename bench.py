@@ -857,8 +857,8 @@ def main() -> None:
 
     # ---- store-write audit: the full checkpoint/lineage commit path
     # (EncodeJob), phase-split so the write side is auditable —
-    # encode+stage write vs lineage derivation vs publish renames vs
-    # lineage commit (verdict r3 "What's wrong #3")
+    # resume scan vs the encode+write action vs lineage commit
+    # (verdict r3 "What's wrong #3")
     store_write = run_store_write(spark, input_path)
     hard_stop(spark)
 

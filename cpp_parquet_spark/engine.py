@@ -36,6 +36,7 @@ import pyarrow as pa
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
@@ -69,33 +70,9 @@ CHUNK_SCHEMA = StructType(
     ]
 )
 
-_CHUNK_ARROW = pa.schema(
-    [
-        ("part_id", pa.int32()),
-        ("chunk_id", pa.int64()),
-        ("column", pa.string()),
-        ("codec", pa.string()),
-        ("physical", pa.string()),
-        ("num_rows", pa.int64()),
-        ("num_entries", pa.int64()),
-        ("num_values", pa.int64()),
-        ("plain_bytes", pa.int64()),
-        ("plain_value_bytes", pa.int64()),
-        ("encoded_bytes", pa.int64()),
-        ("encode_ms", pa.int64()),
-        ("stat_min", pa.binary()),
-        ("stat_max", pa.binary()),
-        ("payload", pa.binary()),
-    ]
-)
+_CHUNK_ARROW = to_arrow_schema(CHUNK_SCHEMA)
 
 DEFAULT_CHUNK_ROWS = 1 << 16
-
-
-def _arrow_schema_for(df: DataFrame) -> pa.Schema:
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    return to_arrow_schema(df.schema)
 
 
 def _encode_table(
@@ -196,7 +173,7 @@ def presample_codecs(df: DataFrame, rows: int = 8192, mode: str = "auto") -> dic
 
     tbl = df.limit(rows).toArrow()
     hints: dict[str, str] = {}
-    for plan in plan_from_schema(_arrow_schema_for(df)):
+    for plan in plan_from_schema(to_arrow_schema(df.schema)):
         col = tbl.column(plan.path[0])
         arr = col.combine_chunks() if isinstance(col, pa.ChunkedArray) else col
         sh = shred(arr, plan)
@@ -214,87 +191,97 @@ def presample_codecs(df: DataFrame, rows: int = 8192, mode: str = "auto") -> dic
     return hints
 
 
+def encode_chunks(
+    batches: Iterable[pa.RecordBatch],
+    plans: list[ColumnPlan],
+    codec: str,
+    chunk_rows: int,
+    codec_hints: dict[str, str] | None = None,
+    part_col: str | None = None,
+) -> Iterator[pa.RecordBatch]:
+    """Encode one task's input batches into chunk batches (CHUNK_SCHEMA),
+    one batch per chunk.  A chunk closes at the first batch boundary
+    where it holds ``chunk_rows`` rows or more.
+
+    Without ``part_col``, ``part_id`` is the Spark partition id.  With
+    ``part_col`` set, that integer column of the batches is a
+    *deterministic* partition key (a content hash, not a task id):
+    chunks are split at its boundaries and ``part_id`` takes its value,
+    which is what lets checkpoint/resume (lineage.EncodeJob) re-derive
+    and skip completed partitions.  The input must then be sorted by it
+    within the task, and ``plans`` cover every other column.
+
+    ``codec_hints`` (from :func:`presample_codecs`) seeds the codec
+    memo so the first chunk skips trial-encode selection; the drift
+    guard and periodic refresh keep the choice adaptive.
+    """
+    import numpy as np
+    from pyspark import TaskContext
+
+    ctx = TaskContext.get()
+    task_part = ctx.partitionId() if ctx is not None else 0
+
+    pending: list[pa.RecordBatch] = []
+    pending_rows = 0
+    chunk_id = 0
+    cur_part = task_part
+    # column -> codec, seeded from driver-side hints (skips the
+    # cold-start trial-encode), refreshed every _RESELECT chunks
+    memo: dict = dict(codec_hints or {})
+    _RESELECT = 16
+
+    def flush() -> pa.RecordBatch:
+        nonlocal pending, pending_rows, chunk_id
+        if chunk_id % _RESELECT == 0 and chunk_id > 0:
+            memo.clear()
+        tbl = pa.Table.from_batches(pending)
+        out = _encode_table(tbl, plans, codec, cur_part, chunk_id, memo=memo)
+        chunk_id += 1
+        pending, pending_rows = [], 0
+        return out
+
+    for b in batches:
+        if part_col is None:
+            parts, data = np.full(b.num_rows, task_part), b
+        else:
+            parts, data = np.asarray(b.column(part_col)), b.drop_columns([part_col])
+        # split the batch at part boundaries (sorted within partition)
+        for piece in np.split(np.arange(len(parts)), np.flatnonzero(np.diff(parts)) + 1):
+            if not len(piece):
+                continue
+            pval = int(parts[piece[0]])
+            if pval != cur_part:
+                if pending_rows:
+                    yield flush()
+                chunk_id = 0  # chunk ids start at 0 per partition, even
+                # when the previous part ended exactly on a flush
+                memo.clear()  # new partition: data distribution changes
+            cur_part = pval
+            pending.append(data.slice(int(piece[0]), len(piece)))
+            pending_rows += len(piece)
+            if pending_rows >= chunk_rows:
+                yield flush()
+    if pending_rows:
+        yield flush()
+
+
 def encode_dataframe(
     df: DataFrame,
     codec: str = "auto",
     chunk_rows: int = DEFAULT_CHUNK_ROWS,
-    part_col: str | None = None,
     codec_hints: dict[str, str] | None = None,
 ) -> DataFrame:
     """Encode every column of ``df`` into compressed column chunks.
 
     Returns the chunk-metadata DataFrame (CHUNK_SCHEMA): one row per
-    (partition, chunk, column) carrying the serialized chunk payload.
-
-    With ``part_col`` set, that integer column is a *deterministic*
-    partition key (a content hash, not a task id): chunks are split at
-    its boundaries and ``part_id`` takes its value, which is what makes
-    checkpoint/resume (lineage.EncodeJob) able to re-derive and skip
-    completed partitions.  The caller must have repartitioned and
-    sorted by it.  Without it, ``part_id`` is the Spark partition id.
-
-    ``codec_hints`` (from :func:`presample_codecs`) seeds each task's
-    codec memo so the first chunk skips trial-encode selection; the
-    drift guard and periodic refresh keep the choice adaptive.
+    (partition, chunk, column) carrying the serialized chunk payload;
+    ``part_id`` is the Spark partition id.  ``codec_hints`` is
+    described on :func:`encode_chunks`.
     """
-    data_fields = [f for f in _arrow_schema_for(df) if f.name != part_col]
-    plans = plan_from_schema(pa.schema(data_fields))
+    plans = plan_from_schema(to_arrow_schema(df.schema))
 
     def encode_batches(batches: Iterable[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        import numpy as np
-        from pyspark import TaskContext
-
-        ctx = TaskContext.get()
-        task_part = ctx.partitionId() if ctx is not None else 0
-
-        pending: list[pa.RecordBatch] = []
-        pending_rows = 0
-        chunk_id = 0
-        cur_part = task_part
-        # column -> codec, seeded from driver-side hints (skips the
-        # cold-start trial-encode), refreshed every _RESELECT chunks
-        memo: dict = dict(codec_hints or {})
-        _RESELECT = 16
-
-        def flush() -> pa.RecordBatch:
-            nonlocal pending, pending_rows, chunk_id
-            if chunk_id % _RESELECT == 0 and chunk_id > 0:
-                memo.clear()
-            tbl = pa.Table.from_batches(pending)
-            out = _encode_table(tbl, plans, codec, cur_part, chunk_id, memo=memo)
-            chunk_id += 1
-            pending, pending_rows = [], 0
-            return out
-
-        for b in batches:
-            if part_col is None:
-                pending.append(b)
-                pending_rows += b.num_rows
-                if pending_rows >= chunk_rows:
-                    yield flush()
-                continue
-            parts = np.asarray(b.column(part_col))
-            data = b.select([f.name for f in data_fields])
-            # split the batch at part boundaries (sorted within partition)
-            bounds = np.flatnonzero(np.diff(parts)) + 1
-            pieces = np.split(np.arange(len(parts)), bounds)
-            for piece in pieces:
-                if not len(piece):
-                    continue
-                pval = int(parts[piece[0]])
-                if pval != cur_part:
-                    if pending_rows:
-                        yield flush()
-                    chunk_id = 0  # chunk ids start at 0 per partition, even
-                    # when the previous part ended exactly on a flush
-                    memo.clear()  # new partition: data distribution changes
-                cur_part = pval
-                pending.append(data.slice(int(piece[0]), len(piece)))
-                pending_rows += len(piece)
-                if pending_rows >= chunk_rows:
-                    yield flush()
-        if pending_rows:
-            yield flush()
+        return encode_chunks(batches, plans, codec, chunk_rows, codec_hints)
 
     return df.mapInArrow(encode_batches, CHUNK_SCHEMA)
 
@@ -365,7 +352,6 @@ def decode_dataframe(
     schema: StructType,
     predicate: tuple[str, object, object] | None = None,
     grouped: bool = False,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Inverse of :func:`encode_dataframe`: chunk rows → original table.
 
@@ -389,24 +375,22 @@ def decode_dataframe(
     because the semi-join's broadcast build side would re-execute the
     whole upstream encode (measured: pruned_scan_agg ran encode twice).
 
-    ``num_partitions`` sizes the decode exchange explicitly (default
-    ``defaultParallelism``: one wave, one decode task per core).
-    Without it, AQE coalesces the ~10x-compressed chunk shuffle to its
-    advisory size and the decode — whose output re-expands by the
-    compression ratio — runs nearly serial (measured: 5 of 64
+    The decode exchange has ``defaultParallelism`` partitions: one
+    wave, one decode task per core.  Without that explicit width, AQE
+    coalesces the ~10x-compressed chunk shuffle to its advisory size
+    and the decode — whose output re-expands by the compression
+    ratio — runs nearly serial (measured: 5 of 64
     partitions survived coalescing at sf0.1; explicit one-wave sizing
     measured 0.52-0.63 s vs 0.66-1.15 s.  Guide §2.2/§2.5: size
     partitions for the *decoded* side).
     """
-    from pyspark.sql.pandas.types import to_arrow_schema
-
     arrow_schema = to_arrow_schema(schema)
     plans = plan_from_schema(arrow_schema)
 
+    n = chunks.sparkSession.sparkContext.defaultParallelism
     if grouped:
         if predicate is not None:
             col, lower, upper = predicate
-            n = num_partitions or chunks.sparkSession.sparkContext.defaultParallelism
             from pyspark.sql import Window
 
             cond = _prune_condition(chunks, schema, col, lower=lower, upper=upper)
@@ -423,7 +407,6 @@ def decode_dataframe(
         if predicate is not None:
             col, lower, upper = predicate
             chunks = prune_chunks(chunks, schema, col, lower=lower, upper=upper)
-        n = num_partitions or chunks.sparkSession.sparkContext.defaultParallelism
         grouped_df = chunks.repartition(n, "part_id", "chunk_id").sortWithinPartitions(
             "part_id", "chunk_id"
         )
@@ -515,7 +498,6 @@ def _prune_condition(chunks: DataFrame, schema: StructType, column: str, lower=N
     no bound is set (nothing to prune).  Semantics documented on
     :func:`prune_chunks`."""
     from pyspark.sql import functions as F
-    from pyspark.sql.pandas.types import to_arrow_schema
 
     from cpp_parquet_spark.stats import order_key
 

@@ -18,25 +18,35 @@ already committed.
 Commit protocol (Iceberg manifest semantics): data files are immutable
 and uniquely named, and a snapshot exists once its lineage commit file
 — which lists those files — is linked into ``lineage/`` (an ``os.link``
-compare-and-swap).  Readers open exactly the listed files, so a writer
-that crashed before its commit leaves only unlisted files that no reader
-sees; cleanup of such leftovers is housekeeping, never correctness.  The
-store is the union of all committed snapshots.
+compare-and-swap).  Each encode task writes its part's chunk file
+straight to its final, still unlisted path and returns the file's
+manifest row; the driver commits those rows.  Readers open exactly the
+listed files, so a writer that crashed before its commit leaves only
+unlisted files that no reader sees; cleanup of such leftovers is
+housekeeping, never correctness.  The store is the union of all
+committed snapshots.
 """
 
 from __future__ import annotations
 
 import contextlib
+import itertools
 import os
 import shutil
 import time
+import uuid
+from typing import Iterator
 
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import IntegerType, LongType, StringType, StructField, StructType
 
-from cpp_parquet_spark.engine import DEFAULT_CHUNK_ROWS, decode_dataframe, encode_dataframe, row_hash
+from cpp_parquet_spark.engine import CHUNK_SCHEMA, DEFAULT_CHUNK_ROWS, decode_dataframe, encode_chunks, row_hash
+from cpp_parquet_spark.schema_plan import plan_from_schema
 
 class ConcurrentCommitError(RuntimeError):
     """Raised when the snapshot-commit CAS loses to a concurrent writer
@@ -59,14 +69,61 @@ LINEAGE_SCHEMA = pa.schema(
     ]
 )
 
+# what an encode task returns per chunk file it wrote: the file
+# (relative to chunks/) and the part's lineage counters
+FILE_ROWS = StructType(
+    [
+        StructField("part_id", IntegerType(), False),
+        StructField("file", StringType(), False),
+        StructField("chunk_count", LongType(), False),
+        StructField("record_count", LongType(), False),
+        StructField("encoded_bytes", LongType(), False),
+        StructField("plain_bytes", LongType(), False),
+    ]
+)
+
+# a chunk file holds CHUNK_SCHEMA minus part_id, which its directory names
+_CHUNK_FILE_ARROW = to_arrow_schema(StructType([f for f in CHUNK_SCHEMA.fields if f.name != "part_id"]))
+
+
+def _write_files(chunks: Iterator[pa.RecordBatch], chunks_dir: str, token: str) -> Iterator[pa.RecordBatch]:
+    """Write one task's chunk batches (grouped by part, as
+    ``encode_chunks`` emits them) to one new file per part,
+    ``chunks_dir/part_id=N/<token>-N-<uuid>.parquet``, with one row group
+    per chunk and ``part_id`` only in the directory name.  Yields the
+    file's FILE_ROWS row once the file is closed."""
+    for pid, group in itertools.groupby(chunks, key=lambda c: c.column("part_id")[0].as_py()):
+        rel = f"part_id={pid}/{token}-{pid}-{uuid.uuid4().hex}.parquet"
+        path = os.path.join(chunks_dir, rel)
+        os.makedirs(os.path.dirname(path), exist_ok=True)
+        row = dict(part_id=pid, file=rel, chunk_count=0, record_count=0, encoded_bytes=0, plain_bytes=0)
+        with pq.ParquetWriter(path, _CHUNK_FILE_ARROW) as writer:
+            for chunk in group:
+                writer.write_batch(chunk.drop_columns(["part_id"]))
+                # chunk_count counts column-chunk rows, as the store holds them
+                row["chunk_count"] += chunk.num_rows
+                row["record_count"] += chunk.column("num_rows")[0].as_py()
+                row["encoded_bytes"] += pc.sum(chunk.column("encoded_bytes")).as_py()
+                row["plain_bytes"] += pc.sum(chunk.column("plain_bytes")).as_py()
+        yield pa.RecordBatch.from_pylist([row], schema=to_arrow_schema(FILE_ROWS))
+
 
 class EncodeJob:
     """A checkpointed encode job writing to ``base_dir``.
 
     Layout:
-      base_dir/chunks/part_id=N/*.parquet   — encoded column chunks
+      base_dir/chunks/part_id=N/part-<snapshot>-a<attempt>-p<driver pid>-N-<uuid>.parquet
+                                            — encoded column chunks: one file
+                                              per part per attempt, one row
+                                              group per chunk
       base_dir/lineage/*.parquet            — commit records (manifests)
     """
+
+    # minimum age before a staging dir, commit tmp or group of unlisted
+    # chunk files is treated as a crash leftover rather than a live
+    # concurrent writer's workspace (ADVICE r5: unconditional cleanup
+    # deleted a live writer's staging mid-run)
+    stale_staging_sec = 3600.0
 
     def __init__(
         self,
@@ -76,7 +133,6 @@ class EncodeJob:
         codec: str = "auto",
         chunk_rows: int = DEFAULT_CHUNK_ROWS,
         snapshot_id: str = "snap-0",
-        stale_staging_sec: float = 3600.0,
     ) -> None:
         self.base_dir = base_dir
         self.chunks_dir = os.path.join(base_dir, "chunks")
@@ -86,11 +142,6 @@ class EncodeJob:
         self.codec = codec
         self.chunk_rows = chunk_rows
         self.snapshot_id = snapshot_id
-        # minimum age before a staging dir, commit tmp or unlisted chunk
-        # file is treated as a crash leftover rather than a live
-        # concurrent writer's workspace (ADVICE r5: unconditional
-        # cleanup deleted a live writer's staging mid-run)
-        self.stale_staging_sec = stale_staging_sec
 
     # -------------------------------------------------- partition key
 
@@ -136,48 +187,64 @@ class EncodeJob:
         return {r["part_id"] for r in catalog if r["snapshot_id"] == self.snapshot_id}
 
     def _clean_orphans(self, listed: set[str]) -> list[int]:
-        """Resume-time housekeeping: drop staging dirs, commit tmps and
+        """Resume-time housekeeping: drop staging dirs (left by writers
+        that staged through Spark's partitioned write), commit tmps and
         chunk files that no commit lists.  Each is dropped only when
         older than ``stale_staging_sec`` — a fresh one may belong to a
-        live concurrent writer.  Readers open only listed files, so this
-        never changes what a reader sees.  Returns the part ids whose
-        unlisted files were dropped."""
+        live concurrent writer.  Unlisted chunk files are judged per
+        attempt token (the name before ``-<part>-<uuid>.parquet``) by the
+        newest file of that attempt, so a live attempt's finished files
+        survive while its other tasks are still writing.  Readers open
+        only listed files, so this never changes what a reader sees.
+        Returns the part ids whose unlisted files were dropped."""
         now = time.time()
 
-        def stale(root: str) -> bool:
-            """Newest mtime anywhere under ``root`` is old — a live
+        def stale(roots: list[str]) -> bool:
+            """Newest mtime anywhere under ``roots`` is old — a live
             writer may not touch a staging dir's top level for the whole
             duration of a long task write."""
             try:
-                newest = os.path.getmtime(root)
-                for dirpath, _dirs, files in os.walk(root):
-                    for entry in files:
-                        newest = max(newest, os.path.getmtime(os.path.join(dirpath, entry)))
+                newest = max(os.path.getmtime(root) for root in roots)
+                for root in roots:
+                    for dirpath, _dirs, files in os.walk(root):
+                        for entry in files:
+                            newest = max(newest, os.path.getmtime(os.path.join(dirpath, entry)))
             except FileNotFoundError:  # pragma: no cover - racing writer/cleaner
                 return False
             return now - newest > self.stale_staging_sec
 
         for name in os.listdir(self.base_dir) if os.path.isdir(self.base_dir) else []:
             path = os.path.join(self.base_dir, name)
-            if name.startswith("staging-") and stale(path):
+            if name.startswith("staging-") and stale([path]):
                 shutil.rmtree(path, ignore_errors=True)
-            elif name.startswith(".commit-") and name.endswith(".tmp") and stale(path):
+            elif name.startswith(".commit-") and name.endswith(".tmp") and stale([path]):
                 # the real commit file only ever appears atomically
                 # (os.link), so an old tmp is garbage, never a half-commit
                 with contextlib.suppress(FileNotFoundError):
                     os.unlink(path)
-        dropped = set()
+        attempts: dict[str, list[tuple[int, str]]] = {}
         parts = os.listdir(self.chunks_dir) if os.path.isdir(self.chunks_dir) else []
         for part in parts:
             if not part.startswith("part_id="):
                 continue
             for name in os.listdir(os.path.join(self.chunks_dir, part)):
-                path = os.path.join(self.chunks_dir, part, name)
-                if f"{part}/{name}" not in listed and stale(path):
+                if f"{part}/{name}" not in listed:
+                    path = os.path.join(self.chunks_dir, part, name)
+                    attempts.setdefault(name.rsplit("-", 2)[0], []).append((int(part.split("=", 1)[1]), path))
+        dropped = set()
+        for members in attempts.values():
+            if stale([path for _, path in members]):
+                for pid, path in members:
                     with contextlib.suppress(FileNotFoundError):
                         os.unlink(path)
-                    dropped.add(int(part.split("=", 1)[1]))
+                    dropped.add(pid)
         return sorted(dropped)
+
+    def _take_back(self, files: list[str]) -> None:
+        """Unlink an aborted attempt's chunk files (relative to chunks/)."""
+        for rel in files:
+            with contextlib.suppress(FileNotFoundError):
+                os.unlink(os.path.join(self.chunks_dir, rel))
 
     # -------------------------------------------------- run / resume
 
@@ -189,12 +256,14 @@ class EncodeJob:
         ``only_parts`` restricts the run (used by tests to simulate an
         interrupted job).
 
-        The returned dict carries a ``timings`` sub-dict splitting the
-        commit into its phases (encode+stage write, lineage derivation,
-        moving files into the store, lineage commit) so the write-side
-        cost can be audited separately from encode compute.
+        The returned dict carries a ``timings`` sub-dict with the
+        phases: ``resume_scan_sec`` (catalog read and orphan cleanup),
+        ``encode_and_stage_write_sec`` (the one Spark action: every
+        task encodes its parts and writes their chunk files) and
+        ``lineage_commit_sec`` (overlap recheck, file check and the
+        commit CAS), so the write-side cost can be audited separately
+        from encode compute.
         """
-        spark = df.sparkSession
         timings: dict[str, float] = {}
         t0 = time.time()
         catalog = self._catalog()
@@ -209,89 +278,64 @@ class EncodeJob:
         if only_parts is not None:
             pending = pending.filter(F.col("_part").isin(*only_parts))
 
-        # Iceberg-style snapshot staging: write this attempt's chunks to
-        # a staging dir and derive lineage rows by scanning *only* the
-        # staged files (never the committed store — on a 10^12-file
-        # store a full rescan per resume is the scaling bug).
+        # the hash repartition puts each part in exactly one task and
+        # the sort keeps it contiguous there, so a task writes one file
+        # per part.  The token keeps names unique across the store: the
+        # driver pid separates two racers, which read the same catalog
+        # and so compute the same attempt number.
         shuffled = pending.repartition(self.num_parts, F.col("_part")).sortWithinPartitions("_part")
-        chunks = encode_dataframe(shuffled, codec=self.codec, chunk_rows=self.chunk_rows, part_col="_part")
-        # per-process staging path: Spark's _temporary dir is shared per
-        # output dir, so two racers (which read the same catalog and
-        # compute the SAME attempt number) must not share one
-        staging = os.path.join(
-            self.base_dir, f"staging-{self.snapshot_id}-a{attempt}-p{os.getpid()}"
-        )
+        plans = plan_from_schema(to_arrow_schema(df.schema))
+        codec, chunk_rows, chunks_dir = self.codec, self.chunk_rows, self.chunks_dir
+        token = f"part-{self.snapshot_id}-a{attempt}-p{os.getpid()}"
+
+        def write_parts(batches):
+            chunks = encode_chunks(batches, plans, codec, chunk_rows, part_col="_part")
+            return _write_files(chunks, chunks_dir, token)
+
         t0 = time.time()
-        chunks.write.mode("overwrite").partitionBy("part_id").parquet(staging)
+        written = [r.asDict() for r in shuffled.mapInArrow(write_parts, FILE_ROWS).collect()]
         timings["encode_and_stage_write_sec"] = round(time.time() - t0, 3)
-
-        staged = {
-            int(n.split("=", 1)[1]): n for n in os.listdir(staging) if n.startswith("part_id=")
+        if written:
+            t0 = time.time()
+            self._commit(written, completed, attempt)
+            timings["lineage_commit_sec"] = round(time.time() - t0, 3)
+        return {
+            "committed_partitions": len(written),
+            "skipped_partitions": len(completed),
+            "orphans_cleaned": orphans,
+            "attempt": attempt,
+            "timings": timings,
         }
-        if not staged:  # nothing pending: no-op resume
-            shutil.rmtree(staging)
-            return {
-                "committed_partitions": 0,
-                "skipped_partitions": len(completed),
-                "orphans_cleaned": orphans,
-                "attempt": attempt,
-                "timings": timings,
-            }
-        t0 = time.time()
-        derived = (
-            spark.read.parquet(staging)
-            .groupBy("part_id")
-            .agg(
-                F.count("*").alias("chunk_count"),
-                # every column chunk of a (part, chunk) repeats num_rows,
-                # so divide the sum by the column count for true records
-                F.sum("num_rows").alias("record_count_x"),
-                F.countDistinct("column").alias("n_cols"),
-                F.sum("encoded_bytes").alias("encoded_bytes"),
-                F.sum("plain_bytes").alias("plain_bytes"),
-            )
-            .collect()
-        )
-        timings["lineage_derive_sec"] = round(time.time() - t0, 3)
 
-        # pre-placement recheck (optimistic concurrency, phase 1): if a
-        # concurrent writer committed any of our staged partitions under
-        # this snapshot while we were encoding, abort before placing a
-        # single file.  The commit CAS below closes the remaining window
-        # where both writers pass this check.
-        overlap = sorted((self._committed(self._catalog()) - completed) & staged.keys())
+    def _commit(self, written: list[dict], completed: set[int], attempt: int) -> None:
+        """Commit the attempt's file rows as one lineage commit, or take
+        its files back and raise ConcurrentCommitError."""
+        files = [r["file"] for r in written]
+        # pre-commit recheck (optimistic concurrency, phase 1): if a
+        # concurrent writer committed any of our partitions under this
+        # snapshot while we were encoding, abort.  The commit CAS below
+        # closes the remaining window where both writers pass this check.
+        overlap = sorted((self._committed(self._catalog()) - completed) & {r["part_id"] for r in written})
         if overlap:
-            shutil.rmtree(staging)
+            self._take_back(files)
             raise ConcurrentCommitError(
                 f"partitions {overlap} were committed by a concurrent "
                 f"writer while this attempt was encoding; re-run to "
                 "resume from the winner's lineage"
             )
-
-        # place: move each staged data file into chunks/part_id=N/ under
-        # a name unique to the whole store (snapshot/attempt token, part
-        # id, then Spark's job-UUID file name — Spark gives one task's
-        # file the same name in every part dir it writes), so a move
-        # never collides with another file and chunks() can key files by
-        # name.  Until the commit lists them the placed files are
-        # invisible to readers.
-        t0 = time.time()
-        files: dict[int, list[str]] = {}
-        for pid, part in staged.items():
-            os.makedirs(os.path.join(self.chunks_dir, part), exist_ok=True)
-            for name in sorted(os.listdir(os.path.join(staging, part))):
-                if name.startswith((".", "_")):  # checksums, markers
-                    continue
-                token = f"{self.snapshot_id}-a{attempt}-{pid}"
-                rel = f"{part}/part-{token}-{name.removeprefix('part-')}"
-                dst = os.path.join(self.chunks_dir, rel)
-                os.replace(os.path.join(staging, part, name), dst)
-                # restart the staleness clock: the file's write time may
-                # be long past, and until the commit lands it must not
-                # look like a crash leftover to a concurrent cleaner
-                os.utime(dst)
-                files.setdefault(pid, []).append(rel)
-        timings["publish_rename_sec"] = round(time.time() - t0, 3)
+        # restart the staleness clock: a file's write time may be long
+        # past, and until the commit lands it must not look like a crash
+        # leftover to a concurrent cleaner.  A file that is already gone
+        # was taken by such a cleaner, so this attempt cannot commit.
+        try:
+            for rel in files:
+                os.utime(os.path.join(self.chunks_dir, rel))
+        except FileNotFoundError:
+            self._take_back(files)
+            raise ConcurrentCommitError(
+                "a chunk file vanished before the commit (a concurrent "
+                "cleaner treated it as stale); re-run to resume"
+            ) from None
 
         # commit: the <= num_parts manifest rows are written driver-side
         # with pyarrow (a catalog commit is a metadata operation, not a
@@ -302,23 +346,18 @@ class EncodeJob:
         # attempt) first, so the loser of a race raises instead of
         # clobbering, and a crash mid-write never leaves a truncated
         # commit file in lineage_dir.
-        t0 = time.time()
         committed_at = time.strftime("%Y-%m-%dT%H:%M:%S")
         tbl = pa.Table.from_pylist(
             [
                 {
+                    **r,
                     "snapshot_id": self.snapshot_id,
-                    "part_id": r["part_id"],
-                    "chunk_count": r["chunk_count"],
-                    "record_count": r["record_count_x"] // r["n_cols"],
-                    "encoded_bytes": r["encoded_bytes"],
-                    "plain_bytes": r["plain_bytes"],
                     "status": "committed",
                     "attempt": attempt,
                     "committed_at": committed_at,
-                    "files": files[r["part_id"]],
+                    "files": [r["file"]],
                 }
-                for r in derived
+                for r in written
             ],
             schema=LINEAGE_SCHEMA,
         )
@@ -331,11 +370,8 @@ class EncodeJob:
         try:
             os.link(tmp, dst)
         except (FileExistsError, FileNotFoundError) as exc:
-            # lost the race: take back every placed file, unseen
-            for rel in (rel for rels in files.values() for rel in rels):
-                with contextlib.suppress(FileNotFoundError):
-                    os.unlink(os.path.join(self.chunks_dir, rel))
-            shutil.rmtree(staging, ignore_errors=True)
+            # lost the race: take back every written file, unseen
+            self._take_back(files)
             if isinstance(exc, FileNotFoundError):  # pragma: no cover - cleaner race
                 raise ConcurrentCommitError(
                     "commit tmp vanished before linking (a concurrent "
@@ -349,28 +385,19 @@ class EncodeJob:
         finally:
             with contextlib.suppress(FileNotFoundError):
                 os.unlink(tmp)
-        timings["lineage_commit_sec"] = round(time.time() - t0, 3)
-        shutil.rmtree(staging, ignore_errors=True)
-        return {
-            "committed_partitions": len(derived),
-            "skipped_partitions": len(completed),
-            "orphans_cleaned": orphans,
-            "attempt": attempt,
-            "timings": timings,
-        }
 
     # -------------------------------------------------- read back
 
     def chunks(self, spark: SparkSession) -> DataFrame:
         """The committed store: exactly the files the lineage commits
         list (``basePath`` keeps ``part_id`` an int partition column).
-        Files a writer placed but never committed stay invisible.
+        Files a writer wrote but never committed stay invisible.
 
         Chunk ids restart at 0 in every file, so when several snapshots
         hold one part, the k-th file of a part has its chunk ids offset
         by ``k << 32`` to keep (part_id, chunk_id) a unique chunk-group
-        key; a part with a single file reads unchanged.  Placed names
-        are unique across the store, so the file name alone picks the
+        key; a part with a single file reads unchanged.  File names are
+        unique across the store, so the file name alone picks the
         offset."""
         rank: dict[str, int] = {}
         per_part: dict[int, int] = {}
@@ -391,14 +418,10 @@ class EncodeJob:
         ]
         return df.withColumn("chunk_id", F.col("chunk_id") + F.coalesce(offset, F.lit(0)))
 
-    def decode(self, spark: SparkSession, schema, predicate=None, num_partitions=None) -> DataFrame:
+    def decode(self, spark: SparkSession, schema, predicate=None) -> DataFrame:
         """Decode the committed store; ``predicate=(column, lo, hi)``
         prunes chunks JVM-side before any payload reaches Python
-        (the store's predicate-pushdown surface).  ``num_partitions``
-        passes through to decode_dataframe's exchange sizing (default
-        one task per core; each decode task streams one chunk group at
-        a time, so task memory is bounded by chunk size, not partition
-        size)."""
-        return decode_dataframe(
-            self.chunks(spark), schema, predicate=predicate, num_partitions=num_partitions
-        )
+        (the store's predicate-pushdown surface).  Each decode task
+        streams one chunk group at a time, so task memory is bounded by
+        chunk size, not partition size."""
+        return decode_dataframe(self.chunks(spark), schema, predicate=predicate)

@@ -24,6 +24,7 @@ from typing import Iterable, Iterator
 import pyarrow as pa
 
 from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import IntegerType, LongType, StringType, StructField, StructType
 
 from cpp_parquet_spark.engine import DEFAULT_CHUNK_ROWS
@@ -39,15 +40,7 @@ MANIFEST_SCHEMA = StructType(
     ]
 )
 
-_MANIFEST_ARROW = pa.schema(
-    [
-        ("file", pa.string()),
-        ("part_id", pa.int32()),
-        ("rows", pa.int64()),
-        ("row_groups", pa.int64()),
-        ("bytes", pa.int64()),
-    ]
-)
+_MANIFEST_ARROW = to_arrow_schema(MANIFEST_SCHEMA)
 
 
 def write_dataset(

@@ -18,6 +18,8 @@ late-data-handling example.
 
 from __future__ import annotations
 
+import copy
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -40,14 +42,8 @@ def encode_stream(
     def run_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        batch_job = EncodeJob(
-            base_dir=job.base_dir,
-            num_parts=job.num_parts,
-            keys=job.keys,
-            codec=job.codec,
-            chunk_rows=job.chunk_rows,
-            snapshot_id=f"{job.snapshot_id}-b{batch_id}",
-        )
+        batch_job = copy.copy(job)
+        batch_job.snapshot_id = f"{job.snapshot_id}-b{batch_id}"
         batch_job.run(batch_df)
 
     writer = source.writeStream.foreachBatch(run_batch).option(

@@ -359,3 +359,107 @@ def test_map_column_roundtrips_through_both_layouts(spark, workdir):
     chunks = encode_pipeline(src, num_partitions=4, chunk_rows=512)
     got = {r["id"]: r for r in decode_dataframe(chunks, src.schema).collect()}
     assert got == exp
+
+
+def test_unlisted_files_age_per_attempt(spark, workdir):
+    """Unlisted chunk files are judged per attempt token by the newest
+    file of the attempt: a live attempt's early finished files survive
+    while its other tasks still write, and go once the whole attempt is
+    stale."""
+    src = _src(spark)
+    job = EncodeJob(workdir, num_parts=4, chunk_rows=4096)
+    job.run(src)
+    part = sorted(os.listdir(job.chunks_dir))[0]
+    pid = int(part.split("=", 1)[1])
+    planted = [
+        os.path.join(job.chunks_dir, part, f"part-snap-0-a7-p1-{pid}-{tag}.parquet")
+        for tag in ("aaaa", "bbbb")
+    ]
+    for p in planted:
+        with open(p, "wb") as fh:
+            fh.write(b"an attempt's chunk file")
+    old = os.path.getmtime(planted[0]) - 2 * job.stale_staging_sec
+    os.utime(planted[0], (old, old))
+    r = job.run(src)
+    assert r["orphans_cleaned"] == []
+    assert all(os.path.exists(p) for p in planted), "a live attempt's older file was dropped"
+
+    os.utime(planted[1], (old, old))
+    r = job.run(src)
+    assert r["orphans_cleaned"] == [pid]
+    assert not any(os.path.exists(p) for p in planted)
+    _assert_decodes_exactly(spark, job, src)
+
+
+def test_lineage_rows_match_the_store(spark, workdir):
+    """Each part's lineage counters equal the same aggregates over the
+    chunk rows a reader sees."""
+    src = _src(spark)
+    job = EncodeJob(workdir, num_parts=8, chunk_rows=16)
+    all_parts = sorted(
+        r["_part"] for r in job.with_part(src).select("_part").distinct().collect()
+    )
+    # a chunk closes at a batch boundary, so small batches make several
+    # chunks per part
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "16")
+    try:
+        job.run(src, only_parts=all_parts[: len(all_parts) // 2])
+        job.run(src)
+    finally:
+        spark.conf.set(key, prev)
+    got = {
+        r["part_id"]: (r["chunk_count"], r["record_count"], r["encoded_bytes"], r["plain_bytes"])
+        for r in job.lineage(spark).collect()
+    }
+    exp = {
+        r["part_id"]: (r["n"], r["rows"] // r["n_cols"], r["enc"], r["plain"])
+        for r in job.chunks(spark)
+        .groupBy("part_id")
+        .agg(
+            F.count("*").alias("n"),
+            F.sum("num_rows").alias("rows"),
+            F.countDistinct("column").alias("n_cols"),
+            F.sum("encoded_bytes").alias("enc"),
+            F.sum("plain_bytes").alias("plain"),
+        )
+        .collect()
+    }
+    assert sorted(got) == all_parts
+    assert got == exp
+    assert max(c for c, *_ in got.values()) > len(src.columns), "want several chunks in a part"
+
+
+def test_vanished_file_aborts_the_commit(spark, workdir):
+    """A chunk file that a concurrent cleaner removed between the write
+    and the commit makes the attempt abort: it takes back its other
+    files and commits nothing, and the next run commits the part."""
+    from cpp_parquet_spark.lineage import ConcurrentCommitError
+
+    src = _src(spark)
+    first = EncodeJob(workdir, num_parts=4, chunk_rows=4096)
+    all_parts = sorted(
+        r["_part"] for r in first.with_part(src).select("_part").distinct().collect()
+    )
+    first.run(src, only_parts=all_parts[:1])
+    store_before = _store_files(first)
+    lineage_before = sorted(os.listdir(first.lineage_dir))
+
+    class Vanishing(EncodeJob):
+        calls = 0
+
+        def _catalog(self):
+            self.calls += 1
+            if self.calls == 2:  # the pre-commit recheck
+                os.unlink(sorted(set(_store_files(self)) - set(store_before))[0])
+            return super()._catalog()
+
+    with pytest.raises(ConcurrentCommitError):
+        Vanishing(workdir, num_parts=4, chunk_rows=4096).run(src)
+    assert _store_files(first) == store_before
+    assert sorted(os.listdir(first.lineage_dir)) == lineage_before
+
+    r = EncodeJob(workdir, num_parts=4, chunk_rows=4096).run(src)
+    assert r["committed_partitions"] == len(all_parts) - 1
+    _assert_decodes_exactly(spark, first, src)
