@@ -49,6 +49,7 @@ from pyspark.sql.types import (
 )
 
 from cpp_parquet_spark.schema_plan import ColumnPlan, plan_from_schema
+from cpp_parquet_spark.session import forget_zip_finders
 
 CHUNK_SCHEMA = StructType(
     [
@@ -200,8 +201,8 @@ def encode_chunks(
     part_col: str | None = None,
 ) -> Iterator[pa.RecordBatch]:
     """Encode one task's input batches into chunk batches (CHUNK_SCHEMA),
-    one batch per chunk.  A chunk closes at the first batch boundary
-    where it holds ``chunk_rows`` rows or more.
+    one batch per chunk.  A chunk closes when it holds ``chunk_rows``
+    rows, at a part boundary, or at the end of the input.
 
     Without ``part_col``, ``part_id`` is the Spark partition id.  With
     ``part_col`` set, that integer column of the batches is a
@@ -215,6 +216,9 @@ def encode_chunks(
     memo so the first chunk skips trial-encode selection; the drift
     guard and periodic refresh keep the choice adaptive.
     """
+    forget_zip_finders()
+    if chunk_rows < 1:
+        raise ValueError(f"chunk_rows must be at least 1, got {chunk_rows}")
     import numpy as np
     from pyspark import TaskContext
 
@@ -246,10 +250,11 @@ def encode_chunks(
         else:
             parts, data = np.asarray(b.column(part_col)), b.drop_columns([part_col])
         # split the batch at part boundaries (sorted within partition)
-        for piece in np.split(np.arange(len(parts)), np.flatnonzero(np.diff(parts)) + 1):
-            if not len(piece):
+        edges = [0, *(np.flatnonzero(np.diff(parts)) + 1).tolist(), len(parts)]
+        for start, stop in zip(edges, edges[1:]):
+            if start == stop:
                 continue
-            pval = int(parts[piece[0]])
+            pval = int(parts[start])
             if pval != cur_part:
                 if pending_rows:
                     yield flush()
@@ -257,10 +262,13 @@ def encode_chunks(
                 # when the previous part ended exactly on a flush
                 memo.clear()  # new partition: data distribution changes
             cur_part = pval
-            pending.append(data.slice(int(piece[0]), len(piece)))
-            pending_rows += len(piece)
-            if pending_rows >= chunk_rows:
-                yield flush()
+            while start < stop:
+                take = min(stop - start, chunk_rows - pending_rows)
+                pending.append(data.slice(start, take))
+                pending_rows += take
+                start += take
+                if pending_rows == chunk_rows:
+                    yield flush()
     if pending_rows:
         yield flush()
 
@@ -412,6 +420,7 @@ def decode_dataframe(
         )
 
     def decode_batches(batches: Iterable[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        forget_zip_finders()
         from cpp_parquet_spark.chunk import decode_chunk_to_column
 
         current: tuple | None = None

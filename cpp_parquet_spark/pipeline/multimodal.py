@@ -27,6 +27,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from cpp_parquet_spark.session import forget_zip_finders
+
 MEDIA_SCHEMA = StructType(
     [
         StructField("media_id", LongType(), False),
@@ -146,6 +148,7 @@ def extract_features(media: DataFrame, mode: str = "fake") -> DataFrame:
     )
 
     def run(batches):
+        forget_zip_finders()
         import numpy as np
 
         for b in batches:
@@ -203,6 +206,7 @@ def resize_images(media: DataFrame, out_w: int = 8, out_h: int = 8, mode: str = 
     out_px = out_w * out_h
 
     def run(batches):
+        forget_zip_finders()
         import numpy as np
 
         for b in batches:
@@ -294,6 +298,7 @@ def frame_sample(media: DataFrame, n_frames: int = 4, mode: str = "fake") -> Dat
     )
 
     def run(batches):
+        forget_zip_finders()
         import numpy as np
 
         for b in batches:

@@ -19,6 +19,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from cpp_parquet_spark.session import forget_zip_finders
+
 
 def _int_vec(col) -> Column:
     return F.transform(col, lambda x: F.round(x * 1000).cast("long"))
@@ -143,6 +145,7 @@ def lsh_band_buckets(
     )
 
     def op(batches):
+        forget_zip_finders()
         for b in batches:
             n = b.num_rows
             if n == 0:
@@ -186,6 +189,7 @@ def _assign_centroids(df: DataFrame, centroids: np.ndarray, id_col: str, vec_col
     )
 
     def op(batches):
+        forget_zip_finders()
         for b in batches:
             n = b.num_rows
             if n == 0:
@@ -216,6 +220,7 @@ def _probe_lists(
     arrow_out = pa.schema([("qid", pa.int64()), ("cid", pa.int32())])
 
     def op(batches):
+        forget_zip_finders()
         for b in batches:
             n = b.num_rows
             if n == 0:

@@ -29,6 +29,7 @@ from pyspark.sql.types import IntegerType, LongType, StringType, StructField, St
 
 from cpp_parquet_spark.engine import DEFAULT_CHUNK_ROWS
 from cpp_parquet_spark.parquet_writer import ParquetWriter
+from cpp_parquet_spark.session import forget_zip_finders
 
 MANIFEST_SCHEMA = StructType(
     [
@@ -62,6 +63,7 @@ def write_dataset(
     os.makedirs(directory, exist_ok=True)
 
     def task(batches: Iterable[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        forget_zip_finders()
         from pyspark import TaskContext
 
         ctx = TaskContext.get()

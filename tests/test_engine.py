@@ -15,11 +15,13 @@ from cpp_parquet_spark.datagen import (
 )
 from cpp_parquet_spark.engine import (
     decode_dataframe,
+    encode_chunks,
     encode_dataframe,
     encode_pipeline,
     partition_for_encoding,
     size_report,
 )
+from cpp_parquet_spark.schema_plan import plan_from_schema
 
 
 def _roundtrip_check(df, keys):
@@ -71,6 +73,27 @@ def test_nulls_roundtrip(spark):
         "id bigint, s string, x double",
     )
     _roundtrip_check(df, ["id"])
+
+
+def test_chunk_rows_caps_chunks_inside_a_batch(spark):
+    # one partition of 20000 rows arrives as 8192-row Arrow batches; a
+    # chunk must still close at chunk_rows, not at the next batch boundary
+    df = spark.range(20000).coalesce(1).select(
+        F.col("id"), (F.col("id") % 7).cast("string").alias("s")
+    )
+    chunks = encode_dataframe(df, chunk_rows=16).cache()
+    sizes = chunks.groupBy("part_id", "chunk_id").agg(F.max("num_rows").alias("n")).collect()
+    assert max(r["n"] for r in sizes) <= 16
+    assert sum(r["n"] for r in sizes) == 20000
+    decoded = decode_dataframe(chunks, df.schema)
+    assert sorted(decoded.collect()) == sorted(df.collect())
+
+
+def test_chunk_rows_below_one_is_refused():
+    batch = pa.RecordBatch.from_pydict({"id": pa.array([1, 2, 3], pa.int64())})
+    chunks = encode_chunks([batch], plan_from_schema(batch.schema), "auto", 0)
+    with pytest.raises(ValueError, match="chunk_rows"):
+        next(chunks)
 
 
 def test_encode_pipeline_partitions_and_salts(spark, sf_small):
