@@ -10,7 +10,11 @@ same ingest → shred → encode → serialize dataflow as
 
 with every per-value operation inside numpy/Arrow kernels — no per-row
 Python (input_hint).  Decoding is the inverse mapInArrow over chunk
-rows grouped per (part_id, chunk_id).
+rows grouped per (part_id, chunk_id).  Both sides cut their Arrow
+batch stream with the one grouper the Parquet writer uses for row
+groups, ``parquet_writer.bounded_groups``: encode chunks hold at most
+``chunk_rows`` rows of one part, and decode groups are the runs of one
+(part_id, chunk_id).
 
 Scale notes (designed for ~100 TB / 1000 executors, tested local[32]):
 * the only full-data shuffle is the explicit range repartition; each
@@ -21,8 +25,9 @@ Scale notes (designed for ~100 TB / 1000 executors, tested local[32]):
   the non-key columns) is the last sort key, so the range partitioner's
   sampled bounds can fall inside a heavy key.  The bounds balance rows,
   not bytes;
-* chunk rows are bounded (``chunk_rows``) so executor memory per task
-  is bounded regardless of input size;
+* ``chunk_rows`` caps the rows of a chunk, even inside one Arrow
+  batch, so executor memory per task is bounded regardless of input
+  size;
 * chunk metadata (one row per column chunk) is ~6 rows per 64k input
   rows — the metadata table is ~1e5 smaller than the data, safe to
   aggregate/collect.
@@ -48,6 +53,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from cpp_parquet_spark.parquet_writer import bounded_groups
 from cpp_parquet_spark.schema_plan import ColumnPlan, plan_from_schema
 from cpp_parquet_spark.session import forget_zip_finders
 
@@ -158,9 +164,9 @@ def _encode_table(
     )
 
 
-def presample_codecs(df: DataFrame, rows: int = 8192, mode: str = "auto") -> dict[str, str]:
-    """Driver-side codec pre-selection: run the selector once on a small
-    prefix sample and return {leaf column -> codec} hints.
+def presample_codecs(df: DataFrame) -> dict[str, str]:
+    """Driver-side codec pre-selection: run the selector once on an
+    8192-row prefix sample and return {leaf column -> codec} hints.
 
     Cold-start selection (trial-encoding every column on each task's
     first chunk) measured ~190 ms per task; at 10^6 tasks that is ~50
@@ -172,7 +178,7 @@ def presample_codecs(df: DataFrame, rows: int = 8192, mode: str = "auto") -> dic
     from cpp_parquet_spark.kernels.levels import shred
     from cpp_parquet_spark.selector import select_codec
 
-    tbl = df.limit(rows).toArrow()
+    tbl = df.limit(8192).toArrow()
     hints: dict[str, str] = {}
     for plan in plan_from_schema(to_arrow_schema(df.schema)):
         col = tbl.column(plan.path[0])
@@ -188,7 +194,7 @@ def presample_codecs(df: DataFrame, rows: int = 8192, mode: str = "auto") -> dic
                 # lined = 9.9x).  Leave such columns to true per-chunk
                 # selection.
                 continue
-        hints[plan.dotted] = select_codec(sh.values, plan.physical, mode=mode)
+        hints[plan.dotted] = select_codec(sh.values, plan.physical)
     return hints
 
 
@@ -219,58 +225,27 @@ def encode_chunks(
     forget_zip_finders()
     if chunk_rows < 1:
         raise ValueError(f"chunk_rows must be at least 1, got {chunk_rows}")
-    import numpy as np
     from pyspark import TaskContext
 
     ctx = TaskContext.get()
     task_part = ctx.partitionId() if ctx is not None else 0
 
-    pending: list[pa.RecordBatch] = []
-    pending_rows = 0
     chunk_id = 0
     cur_part = task_part
     # column -> codec, seeded from driver-side hints (skips the
     # cold-start trial-encode), refreshed every _RESELECT chunks
     memo: dict = dict(codec_hints or {})
     _RESELECT = 16
-
-    def flush() -> pa.RecordBatch:
-        nonlocal pending, pending_rows, chunk_id
+    keys = () if part_col is None else (part_col,)
+    for key, tbl in bounded_groups(batches, chunk_rows, keys=keys):
+        part = key[0] if key else task_part
+        if part != cur_part:
+            cur_part, chunk_id = part, 0  # chunk ids start at 0 per partition
+            memo.clear()  # new partition: data distribution changes
         if chunk_id % _RESELECT == 0 and chunk_id > 0:
             memo.clear()
-        tbl = pa.Table.from_batches(pending)
-        out = _encode_table(tbl, plans, codec, cur_part, chunk_id, memo=memo)
+        yield _encode_table(tbl, plans, codec, part, chunk_id, memo=memo)
         chunk_id += 1
-        pending, pending_rows = [], 0
-        return out
-
-    for b in batches:
-        if part_col is None:
-            parts, data = np.full(b.num_rows, task_part), b
-        else:
-            parts, data = np.asarray(b.column(part_col)), b.drop_columns([part_col])
-        # split the batch at part boundaries (sorted within partition)
-        edges = [0, *(np.flatnonzero(np.diff(parts)) + 1).tolist(), len(parts)]
-        for start, stop in zip(edges, edges[1:]):
-            if start == stop:
-                continue
-            pval = int(parts[start])
-            if pval != cur_part:
-                if pending_rows:
-                    yield flush()
-                chunk_id = 0  # chunk ids start at 0 per partition, even
-                # when the previous part ended exactly on a flush
-                memo.clear()  # new partition: data distribution changes
-            cur_part = pval
-            while start < stop:
-                take = min(stop - start, chunk_rows - pending_rows)
-                pending.append(data.slice(start, take))
-                pending_rows += take
-                start += take
-                if pending_rows == chunk_rows:
-                    yield flush()
-    if pending_rows:
-        yield flush()
 
 
 def encode_dataframe(
@@ -423,10 +398,8 @@ def decode_dataframe(
         forget_zip_finders()
         from cpp_parquet_spark.chunk import decode_chunk_to_column
 
-        current: tuple | None = None
-        payloads: dict[str, bytes] = {}
-
-        def flush() -> pa.RecordBatch:
+        for _, group in bounded_groups(batches, None, keys=("part_id", "chunk_id")):
+            payloads = dict(zip(group.column("column").to_pylist(), group.column("payload").to_pylist()))
             arrays = []
             for f in arrow_schema:
                 leaf_cols = [
@@ -435,22 +408,7 @@ def decode_dataframe(
                     if p.path[0] == f.name
                 ]
                 arrays.append(_merge_columns(f, leaf_cols))
-            return pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
-
-        for b in batches:
-            part_ids = b.column("part_id")
-            chunk_ids = b.column("chunk_id")
-            names = b.column("column")
-            pay = b.column("payload")
-            for i in range(b.num_rows):
-                key = (part_ids[i].as_py(), chunk_ids[i].as_py())
-                if current is not None and key != current and payloads:
-                    yield flush()
-                    payloads = {}
-                current = key
-                payloads[names[i].as_py()] = pay[i].as_py()
-        if payloads:
-            yield flush()
+            yield pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
 
     return grouped_df.mapInArrow(decode_batches, schema)
 

@@ -61,12 +61,6 @@ def decode_for(buf: bytes, n: int) -> np.ndarray:
     return deltas.astype(np.int64) + lo
 
 
-def encoded_for_size(n: int, lo: int, hi: int) -> int:
-    """Predicted size without encoding (selector fast path)."""
-    width = int(hi - lo).bit_length()
-    return 9 + (n * width + 7) // 8
-
-
 def encode_delta(values: pa.Array | np.ndarray) -> bytes:
     """Delta + frame-of-reference: first value i64, then FOR over the
     consecutive differences — near-zero bits/value for monotone ids

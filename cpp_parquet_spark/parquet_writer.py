@@ -40,6 +40,7 @@ writes none), and pages can be GZIP-compressed (``compression="gzip"``).
 from __future__ import annotations
 
 import os
+from typing import Iterable, Iterator
 
 import numpy as np
 import pyarrow as pa
@@ -53,6 +54,7 @@ from cpp_parquet_spark.kernels.rle import encode_hybrid
 from cpp_parquet_spark.schema_plan import ColumnPlan, plan_from_schema
 
 MAGIC = b"PAR1"
+CREATED_BY = "cpp-parquet-spark"  # FileMetaData.created_by
 
 # parquet.thrift enums (public format spec)
 _T_BOOLEAN, _T_INT32, _T_INT64, _T_INT96, _T_FLOAT, _T_DOUBLE, _T_BYTE_ARRAY = 0, 1, 2, 3, 4, 5, 6
@@ -489,7 +491,6 @@ class ParquetWriter:
         self,
         path: str,
         schema: pa.Schema,
-        created_by: str = "cpp-parquet-spark",
         int96_timestamps: bool = False,
         use_dictionary: bool = True,
         use_delta: bool = True,
@@ -516,7 +517,6 @@ class ParquetWriter:
         self.plans = plan_from_schema(schema)
         self._elems, self._leaf_paths = _schema_elements(schema, int96_timestamps)
         assert len(self._leaf_paths) == len(self.plans)
-        self._created_by = created_by
         self._row_groups: list[bytes] = []
         self._num_rows = 0
         self._f = open(path, "wb")
@@ -631,7 +631,7 @@ class ParquetWriter:
             tc.f_list(2, tc.T_STRUCT, self._elems),
             tc.f_i64(3, self._num_rows),
             tc.f_list(4, tc.T_STRUCT, self._row_groups),
-            tc.f_binary(6, self._created_by),
+            tc.f_binary(6, CREATED_BY),
         )
         self._f.write(footer)
         self._f.write(len(footer).to_bytes(4, "little"))
@@ -655,36 +655,68 @@ class ParquetWriter:
                 self._f.close()
 
 
-def row_group_slices(
-    table: pa.Table, row_group_rows: int, row_group_bytes: int | None
-) -> list[pa.Table]:
-    """Greedy row-group packing.  With ``row_group_bytes`` set this is
-    the reference's kMaxDataBytesPerRowGroup semantics
+def bounded_groups(
+    batches: Iterable[pa.RecordBatch],
+    max_rows: int | None,
+    max_bytes: int | None = None,
+    keys: tuple[str, ...] = (),
+) -> Iterator[tuple[tuple, pa.Table]]:
+    """Cut a stream of record batches into ``(key values, table)``
+    groups: the one packer behind Parquet row groups (:func:`write_table`,
+    the sink), encode chunks and decode groups.
+
+    This is the reference's kMaxDataBytesPerRowGroup packing
     (CalculateNumberOfRowGroups, parquet-file.cc:104-116 +
-    parquet-file.h:31 — vestigial there, its Flush never calls it):
-    pack rows until the next probe slice would push the group past the
-    byte target, using Arrow buffer sizes as the data-byte estimate.
-    Row-count remains a ceiling either way so level arrays stay bounded.
+    parquet-file.h:31 — vestigial there, its Flush never calls it) with
+    a row cap:
+
+    * a group holds at most ``max_rows`` rows (None: no cap); a batch is
+      sliced at the cap;
+    * with ``max_bytes``, a non-empty group closes before a batch that
+      would take its Arrow buffer bytes past the target;
+    * a group never spans a change in any ``keys`` column (the input
+      must be clustered by them); those columns are dropped, and the
+      key values are ``()`` without keys.
+
+    Empty batches are skipped, so empty input yields no group.
     """
-    n = table.num_rows
-    if n == 0:
-        return [table]
-    if row_group_bytes is None:
-        return [table.slice(s, row_group_rows) for s in range(0, n, row_group_rows)]
-    probe = max(256, min(row_group_rows, n) // 64)
-    out: list[pa.Table] = []
-    start = pos = 0
-    acc = 0
-    while pos < n:
-        step = min(probe, n - pos, row_group_rows - (pos - start))
-        sz = table.slice(pos, step).nbytes
-        if pos > start and (acc + sz > row_group_bytes or pos - start >= row_group_rows):
-            out.append(table.slice(start, pos - start))
-            start, acc = pos, 0
-        pos += step
-        acc += sz
-    out.append(table.slice(start, pos - start))
-    return out
+    if max_rows is not None and max_rows < 1:
+        raise ValueError(f"max_rows must be at least 1, got {max_rows}")
+    pending: list[pa.RecordBatch] = []
+    rows = size = 0
+    key: tuple = ()
+    for b in batches:
+        if b.num_rows == 0:
+            continue
+        edges = [0, b.num_rows]
+        data = b
+        if keys:
+            change = np.zeros(b.num_rows - 1, dtype=bool)
+            for k in keys:
+                v = b.column(k).to_numpy(zero_copy_only=False)
+                change |= v[1:] != v[:-1]
+            edges[1:1] = (np.flatnonzero(change) + 1).tolist()
+            data = b.drop_columns(list(keys))
+        for start, stop in zip(edges, edges[1:]):
+            run_key = tuple(b.column(k)[start].as_py() for k in keys)
+            while start < stop:
+                take = stop - start if max_rows is None else min(stop - start, max_rows - rows)
+                piece = data.slice(start, take)
+                if pending and (
+                    run_key != key
+                    or rows == max_rows
+                    or (max_bytes is not None and size + piece.nbytes > max_bytes)
+                ):
+                    yield key, pa.Table.from_batches(pending)
+                    pending, rows, size = [], 0, 0
+                    continue
+                key = run_key
+                pending.append(piece)
+                rows += take
+                size += piece.nbytes
+                start += take
+    if pending:
+        yield key, pa.Table.from_batches(pending)
 
 
 def write_table(
@@ -710,8 +742,10 @@ def write_table(
         page_records=page_records,
         data_page_version=data_page_version,
     )
+    # with a byte target, pack in probe-sized batches (1/64 of a group)
+    probe = max(256, min(row_group_rows, table.num_rows) // 64) if row_group_bytes is not None else None
     try:
-        for piece in row_group_slices(table, row_group_rows, row_group_bytes):
+        for _, piece in bounded_groups(table.to_batches(max_chunksize=probe), row_group_rows, row_group_bytes):
             w.write_row_group(piece)
         return w.close()
     except BaseException:

@@ -4,11 +4,15 @@ file with :class:`cpp_parquet_spark.parquet_writer.ParquetWriter`.
 This is the reference's single-process writer lifecycle
 (parquet-file.cc:118-177) lifted to Spark's execution model: N tasks
 write N independent files under one directory, each streaming row
-groups as Arrow batches arrive, so executor memory is bounded by the
-row-group size regardless of partition size.  ``spark.read.parquet``
-(or DuckDB/pyarrow on the directory) is the independent-reader oracle,
-mirroring the reference's parquet-dump validation
-(parquet-file-test.cc:37-50).
+groups as Arrow batches arrive.  Row groups are cut by the writer's own
+grouper (``parquet_writer.bounded_groups``) at ``row_group_rows`` rows,
+inside a batch if need be, so executor memory is bounded by the
+row-group size regardless of partition size.  The one entry point,
+:func:`write_parquet_dir`, runs the write job and returns the manifest
+rows; the lazy-manifest ``write_dataset`` was folded into it.
+``spark.read.parquet`` (or DuckDB/pyarrow on the directory) is the
+independent-reader oracle, mirroring the reference's parquet-dump
+validation (parquet-file-test.cc:37-50).
 
 Scale notes: the directory must be shared storage on a real cluster
 (HDFS/S3/NFS — local tmpfs here); files are written to a temp name and
@@ -28,7 +32,7 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import IntegerType, LongType, StringType, StructField, StructType
 
 from cpp_parquet_spark.engine import DEFAULT_CHUNK_ROWS
-from cpp_parquet_spark.parquet_writer import ParquetWriter
+from cpp_parquet_spark.parquet_writer import ParquetWriter, bounded_groups
 from cpp_parquet_spark.session import forget_zip_finders
 
 MANIFEST_SCHEMA = StructType(
@@ -44,22 +48,18 @@ MANIFEST_SCHEMA = StructType(
 _MANIFEST_ARROW = to_arrow_schema(MANIFEST_SCHEMA)
 
 
-def write_dataset(
+def write_parquet_dir(
     df: DataFrame,
     directory: str,
     row_group_rows: int = DEFAULT_CHUNK_ROWS,
-    row_group_bytes: int | None = None,
     compression: str | None = None,
     use_dictionary: bool = True,
     data_page_version: int = 1,
-) -> DataFrame:
-    """Write ``df`` as a directory of real Parquet part files.
-
-    Returns the manifest DataFrame (one row per written file).  The
-    write happens when the manifest is consumed — collect it (or count
-    it) to force the job, then point any Parquet reader at
-    ``directory``.
-    """
+) -> list:
+    """Write ``df`` as a directory of real Parquet part files, one per
+    non-empty partition, with row groups of at most ``row_group_rows``
+    rows.  Returns the manifest rows (driver-side metadata, one row per
+    file — safe to collect)."""
     os.makedirs(directory, exist_ok=True)
 
     def task(batches: Iterable[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
@@ -71,14 +71,7 @@ def write_dataset(
         final = os.path.join(directory, f"part-{pid:05d}.parquet")
         tmp = final + f".{uuid.uuid4().hex[:8]}.inprogress"
         writer: ParquetWriter | None = None
-        buf: list[pa.RecordBatch] = []
-        buf_rows = 0
-
-        buf_bytes = 0
-
-        def flush() -> None:
-            nonlocal writer, buf, buf_rows, buf_bytes
-            tbl = pa.Table.from_batches(buf)
+        for _, tbl in bounded_groups(batches, row_group_rows):
             if writer is None:
                 writer = ParquetWriter(
                     tmp,
@@ -88,23 +81,6 @@ def write_dataset(
                     data_page_version=data_page_version,
                 )
             writer.write_row_group(tbl)
-            buf, buf_rows, buf_bytes = [], 0, 0
-
-        for b in batches:
-            if b.num_rows == 0:
-                continue
-            buf.append(b)
-            buf_rows += b.num_rows
-            buf_bytes += b.nbytes
-            # greedy packing: flush at the row ceiling, or — with a byte
-            # target set (the reference's kMaxDataBytesPerRowGroup,
-            # parquet-file.cc:104-116) — when data bytes reach it
-            if buf_rows >= row_group_rows or (
-                row_group_bytes is not None and buf_bytes >= row_group_bytes
-            ):
-                flush()
-        if buf_rows:
-            flush()
         if writer is None:
             return  # empty partition -> no file
         stats = writer.close()
@@ -120,26 +96,4 @@ def write_dataset(
             schema=_MANIFEST_ARROW,
         )
 
-    return df.mapInArrow(task, MANIFEST_SCHEMA)
-
-
-def write_parquet_dir(
-    df: DataFrame,
-    directory: str,
-    row_group_rows: int = DEFAULT_CHUNK_ROWS,
-    row_group_bytes: int | None = None,
-    compression: str | None = None,
-    use_dictionary: bool = True,
-    data_page_version: int = 1,
-) -> list:
-    """Force the write; return the manifest rows (driver-side metadata,
-    one row per file — safe to collect)."""
-    return write_dataset(
-        df,
-        directory,
-        row_group_rows=row_group_rows,
-        row_group_bytes=row_group_bytes,
-        compression=compression,
-        use_dictionary=use_dictionary,
-        data_page_version=data_page_version,
-    ).collect()
+    return df.mapInArrow(task, MANIFEST_SCHEMA).collect()

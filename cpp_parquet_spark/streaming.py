@@ -68,13 +68,13 @@ def stream_to_parquet(
     idempotent (a re-run batch overwrites its own directory only)."""
     import os
 
-    from cpp_parquet_spark.sink import write_dataset
+    from cpp_parquet_spark.sink import write_parquet_dir
 
     def run_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
         batch_dir = os.path.join(out_dir, f"batch-{batch_id}")
-        write_dataset(batch_df, batch_dir, row_group_rows=row_group_rows).collect()
+        write_parquet_dir(batch_df, batch_dir, row_group_rows=row_group_rows)
 
     writer = source.writeStream.foreachBatch(run_batch).option(
         "checkpointLocation", checkpoint_dir

@@ -250,6 +250,18 @@ def test_distributed_sink(spark, tmp_path):
     assert n == 500
 
 
+def test_sink_row_groups_are_capped(spark, sf_small, tmp_path):
+    """``row_group_rows`` is a cap: one 500-row partition, which reaches
+    the task as a single Arrow batch, still splits at 200 rows."""
+    from cpp_parquet_spark.sink import write_parquet_dir
+
+    df = spark.read.parquet(f"{sf_small}/documents.parquet").coalesce(1)
+    (row,) = write_parquet_dir(df, str(tmp_path / "ds"), row_group_rows=200)
+    md = pq.ParquetFile(row["file"]).metadata
+    assert [md.row_group(i).num_rows for i in range(md.num_row_groups)] == [200, 200, 100]
+    assert row["row_groups"] == 3
+
+
 @pytest.mark.parametrize("table_name", ["documents", "orders", "lineitem", "embeddings", "events"])
 def test_real_testdata_roundtrip(table_name, tmp_path):
     src = pq.read_table(f"/root/testdata/sf0.001/{table_name}.parquet")

@@ -24,12 +24,14 @@ def test_row_group_count_arithmetic():
     produce exactly total_bytes/target groups for a uniform fixed-width
     column — the arithmetic the reference's RowGroupTest asserts —
     checked at 1/512 scale (same formula, no 2 GiB alloc)."""
-    from cpp_parquet_spark.parquet_writer import row_group_slices
+    from cpp_parquet_spark.parquet_writer import bounded_groups
 
     n = 1 << 20  # 4 MiB of INT32
     t = pa.table({"AllInts": pa.array(np.full(n, 2**31 - 1, dtype=np.int32))})
     target = 128 << 10
-    slices = row_group_slices(t, row_group_rows=1 << 30, row_group_bytes=target)
+    # write_table's probe batches: 1/64 of the capped group size
+    batches = t.to_batches(max_chunksize=n // 64)
+    slices = [g for _, g in bounded_groups(batches, max_rows=1 << 30, max_bytes=target)]
     assert len(slices) == (4 * n) // target
     assert sum(s.num_rows for s in slices) == n
 
