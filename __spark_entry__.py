@@ -54,7 +54,7 @@ def _roundtrip(df: DataFrame) -> DataFrame:
     from cpp_parquet_spark.engine import decode_dataframe, encode_dataframe
 
     n = max(1, df.sparkSession.sparkContext.defaultParallelism // 2)
-    enc = encode_dataframe(df.repartition(n), codec="auto")
+    enc = encode_dataframe(df.repartition(n))
     return decode_dataframe(enc, df.schema, grouped=True)
 
 
@@ -555,7 +555,7 @@ def _q_pruned_scan_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
     arranged = orders.repartitionByRange(4, "o_orderkey").sortWithinPartitions("o_orderkey")
-    chunks = encode_dataframe(arranged, codec="auto", chunk_rows=2048)
+    chunks = encode_dataframe(arranged, chunk_rows=2048)
     # pruning on the DEFAULT decode surface (round-5); round-6:
     # grouped=True routes the predicate through the group-wise window
     # prune on the decode exchange — the semi-join's broadcast build

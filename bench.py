@@ -128,7 +128,7 @@ def warm_workers(spark, input_path: str) -> None:
 
     cores = spark.sparkContext.defaultParallelism
     df = spark.read.parquet(input_path).limit(cores * 256).repartition(cores)
-    encode_dataframe(df, codec="auto").groupBy().agg(F.sum("encoded_bytes")).collect()
+    encode_dataframe(df).groupBy().agg(F.sum("encoded_bytes")).collect()
 
 
 def run_encode(
@@ -160,7 +160,6 @@ def run_encode(
     t0 = time.time()
     chunks = encode_pipeline(
         df,
-        codec="auto",
         num_partitions=num_partitions or spark.sparkContext.defaultParallelism * 2,
         codec_hints=codec_hints,
     )
@@ -490,7 +489,7 @@ def exec_scale_worker() -> None:
 
                     def run(d):
                         t0 = time.time()
-                        encode_dataframe(d, codec="auto", codec_hints=hints).groupBy().agg(
+                        encode_dataframe(d, codec_hints=hints).groupBy().agg(
                             F.sum("encoded_bytes")
                         ).collect()
                         return time.time() - t0

@@ -20,10 +20,13 @@ import numpy as np
 import pyarrow as pa
 
 from cpp_parquet_spark.kernels import rle
-from cpp_parquet_spark.kernels.bitpack import bit_width_for
+from cpp_parquet_spark.kernels.alpha import decode_alpha, encode_alpha
+from cpp_parquet_spark.kernels.bitpack import bit_width_for, put_section, take_section
 from cpp_parquet_spark.kernels.dictionary import decode_dict, encode_dict
+from cpp_parquet_spark.kernels.forpack import decode_delta, decode_for, encode_delta, encode_for
 from cpp_parquet_spark.kernels.fsst import decode_fsst, encode_fsst
 from cpp_parquet_spark.kernels.levels import ShreddedColumn, framed_levels, unshred
+from cpp_parquet_spark.kernels.lined import decode_lined, encode_lined
 from cpp_parquet_spark.kernels.plain import decode_plain, encode_plain, fixed_np, plain_size
 from cpp_parquet_spark.kernels.rle_runs import decode_rle_runs, encode_rle_runs
 from cpp_parquet_spark.schema_plan import ColumnPlan
@@ -37,30 +40,25 @@ MAGIC = b"SGC2"
 CODECS = ("plain", "dict", "rle", "fsst", "for", "lined", "delta", "alpha", "boolpack")
 _CODEC_ID = {name: i for i, name in enumerate(CODECS)}
 
+# codec -> (encode, decode) for the codecs that take BYTE_ARRAY only
+_STRING_CODECS = {
+    "fsst": (encode_fsst, decode_fsst),
+    "lined": (encode_lined, decode_lined),
+    "alpha": (encode_alpha, decode_alpha),
+}
+
 
 def _encode_values(values: pa.Array, codec: str, physical: str) -> bytes:
+    if codec in _STRING_CODECS and physical != "BYTE_ARRAY":
+        raise ValueError(f"{codec} only applies to BYTE_ARRAY columns")
     if codec == "plain":
         return encode_plain(values, physical)
     if codec == "dict":
         return encode_dict(values, physical)
     if codec == "rle":
         return encode_rle_runs(values, physical)
-    if codec == "fsst":
-        if physical != "BYTE_ARRAY":
-            raise ValueError("fsst only applies to BYTE_ARRAY columns")
-        return encode_fsst(values)
-    if codec == "lined":
-        from cpp_parquet_spark.kernels.lined import encode_lined
-
-        if physical != "BYTE_ARRAY":
-            raise ValueError("lined only applies to BYTE_ARRAY columns")
-        return encode_lined(values)
-    if codec == "alpha":
-        from cpp_parquet_spark.kernels.alpha import encode_alpha
-
-        if physical != "BYTE_ARRAY":
-            raise ValueError("alpha only applies to BYTE_ARRAY columns")
-        return encode_alpha(values)
+    if codec in _STRING_CODECS:
+        return _STRING_CODECS[codec][0](values)
     if codec == "boolpack":
         if physical != "BOOLEAN":
             raise ValueError("boolpack only applies to BOOLEAN columns")
@@ -69,8 +67,6 @@ def _encode_values(values: pa.Array, codec: str, physical: str) -> bytes:
         # real Parquet's PLAIN boolean layout
         return np.packbits(np.asarray(values, dtype=bool), bitorder="little").tobytes()
     if codec in ("for", "delta"):
-        from cpp_parquet_spark.kernels.forpack import encode_delta, encode_for
-
         ints = fixed_np(values)
         return encode_for(ints) if codec == "for" else encode_delta(ints)
     raise ValueError(f"unknown codec {codec}")
@@ -83,22 +79,12 @@ def _decode_values(buf: bytes, n: int, codec: str, physical: str, arrow_type: pa
         return decode_dict(buf, n, physical, arrow_type)
     if codec == "rle":
         return decode_rle_runs(buf, n, physical, arrow_type)
-    if codec == "fsst":
-        return decode_fsst(buf, n, arrow_type)
-    if codec == "lined":
-        from cpp_parquet_spark.kernels.lined import decode_lined
-
-        return decode_lined(buf, n, arrow_type)
-    if codec == "alpha":
-        from cpp_parquet_spark.kernels.alpha import decode_alpha
-
-        return decode_alpha(buf, n, arrow_type)
+    if codec in _STRING_CODECS:
+        return _STRING_CODECS[codec][1](buf, n, arrow_type)
     if codec == "boolpack":
         bits = np.unpackbits(np.frombuffer(buf, dtype=np.uint8), count=n, bitorder="little")
         return pa.array(bits.astype(bool), type=arrow_type)
     if codec in ("for", "delta"):
-        from cpp_parquet_spark.kernels.forpack import decode_delta, decode_for
-
         arr = decode_for(buf, n) if codec == "for" else decode_delta(buf, n)
         out = pa.array(arr)
         if pa.types.is_date(arrow_type):  # no int64->date32 cast in pyarrow 16
@@ -132,9 +118,7 @@ def serialize_chunk(sh: ShreddedColumn, codec: str) -> tuple[bytes, ChunkMeta]:
     levels = framed_levels(sh)
     out += levels
 
-    data = _encode_values(sh.values, codec, plan.physical)
-    out += len(data).to_bytes(4, "little")
-    out += data
+    put_section(out, _encode_values(sh.values, codec, plan.physical))
     pvb = plain_size(sh.values, plan.physical)
     meta = ChunkMeta(
         codec=codec,
@@ -163,15 +147,13 @@ def deserialize_chunk(buf: bytes, plan: ColumnPlan) -> ShreddedColumn:
     pos += 8
     rep_levels = def_levels = None
     if plan.max_rep > 0:
-        ln = int.from_bytes(mv[pos : pos + 4], "little")
-        rep_levels = rle.decode_hybrid(mv[pos + 4 : pos + 4 + ln], bit_width_for(plan.max_rep), num_entries).astype(np.uint8)
-        pos += 4 + ln
+        stream, pos = take_section(mv, pos)
+        rep_levels = rle.decode_hybrid(stream, bit_width_for(plan.max_rep), num_entries).astype(np.uint8)
     if plan.max_def > 0:
-        ln = int.from_bytes(mv[pos : pos + 4], "little")
-        def_levels = rle.decode_hybrid(mv[pos + 4 : pos + 4 + ln], bit_width_for(plan.max_def), num_entries).astype(np.uint8)
-        pos += 4 + ln
-    dlen = int.from_bytes(mv[pos : pos + 4], "little")
-    values = _decode_values(bytes(mv[pos + 4 : pos + 4 + dlen]), num_values, codec, plan.physical, plan.arrow_type)
+        stream, pos = take_section(mv, pos)
+        def_levels = rle.decode_hybrid(stream, bit_width_for(plan.max_def), num_entries).astype(np.uint8)
+    data, _ = take_section(mv, pos)
+    values = _decode_values(bytes(data), num_values, codec, plan.physical, plan.arrow_type)
     return ShreddedColumn(
         plan=plan,
         def_levels=def_levels,

@@ -54,7 +54,7 @@ from pyspark.sql.types import (
 )
 
 from cpp_parquet_spark.parquet_writer import bounded_groups
-from cpp_parquet_spark.schema_plan import ColumnPlan, plan_from_schema
+from cpp_parquet_spark.schema_plan import ColumnPlan, plan_from_schema, plan_from_spark_schema
 from cpp_parquet_spark.session import forget_zip_finders
 
 CHUNK_SCHEMA = StructType(
@@ -85,14 +85,13 @@ DEFAULT_CHUNK_ROWS = 1 << 16
 def _encode_table(
     table: pa.Table,
     plans: list[ColumnPlan],
-    codec_mode: str,
     part_id: int,
     chunk_id: int,
     memo: dict | None = None,
 ) -> pa.RecordBatch:
     from cpp_parquet_spark.chunk import serialize_chunk
     from cpp_parquet_spark.kernels.levels import shred
-    from cpp_parquet_spark.selector import select_codec
+    from cpp_parquet_spark.selector import CODEC_ERRORS, MARGIN, select_codec
     from cpp_parquet_spark.stats import chunk_stats
 
     import time
@@ -100,10 +99,8 @@ def _encode_table(
     def serialize(sh, codec):
         try:
             return (codec, *serialize_chunk(sh, codec))
-        except (ValueError, TypeError, pa.lib.ArrowNotImplementedError, pa.lib.ArrowInvalid):
-            # a sample-based codec assumption failed on the full chunk
-            # (e.g. alpha alphabet overflow) — PLAIN always works
-            return ("plain", *serialize_chunk(sh, "plain"))
+        except CODEC_ERRORS:
+            return None
 
     rows: list[tuple] = []
     n_rows = table.num_rows
@@ -115,30 +112,27 @@ def _encode_table(
         # per-task codec memo: at pipeline chunk sizes the trial-encode
         # selection costs as much as encoding itself; consecutive chunks
         # of one partition are near-identically distributed (the shuffle
-        # clusters them), so reuse the last choice and fall back below
-        # if it drifts
-        memoized = memo is not None and plan.dotted in memo
-        if memoized:
-            codec = memo[plan.dotted]
-            if codec == "fsst" and sh.values.nbytes > 32e6:
-                # re-apply the selector's own payload cap
-                # (selector.py:126) at chunk level: a memoized/hinted
-                # fsst must not capture a content-sized chunk that
-                # per-chunk selection would have cap-gated — fsst
-                # encodes at ~12 MB/s/core (r5 measured, blocked
-                # replay; gated by test_fsst_encode_throughput_gate)
-                # and the size-based drift guard cannot catch a
-                # slow-but-compressing codec
-                codec = select_codec(sh.values, plan.physical, mode=codec_mode)
-                memo[plan.dotted] = codec
-        else:
-            codec = select_codec(sh.values, plan.physical, mode=codec_mode)
-            if memo is not None:
-                memo[plan.dotted] = codec
-        codec, blob, meta = serialize(sh, codec)
-        if memoized and meta.encoded_bytes > meta.plain_bytes:
-            # drift guard: the memoized codec lost to PLAIN — reselect
-            codec, blob, meta = serialize(sh, select_codec(sh.values, plan.physical, mode=codec_mode))
+        # clusters them), so carry the last choice (or a hint) over and
+        # reselect below if it drifts
+        codec = memo.get(plan.dotted) if memo is not None else None
+        if codec == "fsst" and sh.values.nbytes > 32e6:
+            # re-apply the selector's own payload cap (selector.py
+            # shortlist) at chunk level: a carried fsst must not capture
+            # a content-sized chunk that per-chunk selection would have
+            # cap-gated — fsst encodes at ~12 MB/s/core (r5 measured,
+            # blocked replay; gated by test_fsst_encode_throughput_gate)
+            # and the size-based drift guard cannot catch a
+            # slow-but-compressing codec
+            codec = None
+        out = serialize(sh, codec) if codec else None
+        if out is None or out[2].encoded_bytes > out[2].plain_bytes * MARGIN.get(codec, 1.0):
+            # drift guard: the carried codec cannot encode this chunk or
+            # no longer clears its selection margin over PLAIN — reselect.
+            # PLAIN always works where a sample-based choice fails on the
+            # full chunk (e.g. alpha alphabet overflow).
+            out = serialize(sh, select_codec(sh.values, plan.physical)) or ("plain", *serialize_chunk(sh, "plain"))
+        codec, blob, meta = out
+        if memo is not None:
             memo[plan.dotted] = codec
         rows.append(
             (
@@ -168,19 +162,23 @@ def presample_codecs(df: DataFrame) -> dict[str, str]:
     """Driver-side codec pre-selection: run the selector once on an
     8192-row prefix sample and return {leaf column -> codec} hints.
 
-    Cold-start selection (trial-encoding every column on each task's
-    first chunk) measured ~190 ms per task; at 10^6 tasks that is ~50
-    CPU-hours of pure overhead.  One tiny driver job replaces it; the
-    per-task drift guard still corrects any chunk where the hinted
-    codec loses to PLAIN, and the periodic memo refresh re-runs true
-    selection every ``_RESELECT`` chunks for long tasks.
+    The hints seed every task's codec memo, so a task's first chunk
+    skips trial-encode selection.  What that saves is small: full
+    selection of the four hinted columns of a 4,500-row chunk of
+    perfbench's repo table takes about 37 ms (4-vCPU VM, median of 7),
+    against one extra driver job per call.  A hinted codec is kept only
+    while its chunk clears that codec's margin over PLAIN
+    (``selector.MARGIN``); a chunk where it falls short, or that it
+    cannot encode, is reselected (the drift guard in
+    :func:`_encode_table`), and the memo refresh re-runs true selection
+    every ``_RESELECT`` chunks for long tasks.
     """
     from cpp_parquet_spark.kernels.levels import shred
     from cpp_parquet_spark.selector import select_codec
 
     tbl = df.limit(8192).toArrow()
     hints: dict[str, str] = {}
-    for plan in plan_from_schema(to_arrow_schema(df.schema)):
+    for plan in plan_from_spark_schema(df.schema):
         col = tbl.column(plan.path[0])
         arr = col.combine_chunks() if isinstance(col, pa.ChunkedArray) else col
         sh = shred(arr, plan)
@@ -201,7 +199,6 @@ def presample_codecs(df: DataFrame) -> dict[str, str]:
 def encode_chunks(
     batches: Iterable[pa.RecordBatch],
     plans: list[ColumnPlan],
-    codec: str,
     chunk_rows: int,
     codec_hints: dict[str, str] | None = None,
     part_col: str | None = None,
@@ -244,13 +241,12 @@ def encode_chunks(
             memo.clear()  # new partition: data distribution changes
         if chunk_id % _RESELECT == 0 and chunk_id > 0:
             memo.clear()
-        yield _encode_table(tbl, plans, codec, part, chunk_id, memo=memo)
+        yield _encode_table(tbl, plans, part, chunk_id, memo=memo)
         chunk_id += 1
 
 
 def encode_dataframe(
     df: DataFrame,
-    codec: str = "auto",
     chunk_rows: int = DEFAULT_CHUNK_ROWS,
     codec_hints: dict[str, str] | None = None,
 ) -> DataFrame:
@@ -261,10 +257,10 @@ def encode_dataframe(
     ``part_id`` is the Spark partition id.  ``codec_hints`` is
     described on :func:`encode_chunks`.
     """
-    plans = plan_from_schema(to_arrow_schema(df.schema))
+    plans = plan_from_spark_schema(df.schema)
 
     def encode_batches(batches: Iterable[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        return encode_chunks(batches, plans, codec, chunk_rows, codec_hints)
+        return encode_chunks(batches, plans, chunk_rows, codec_hints)
 
     return df.mapInArrow(encode_batches, CHUNK_SCHEMA)
 
@@ -468,7 +464,7 @@ def _prune_condition(chunks: DataFrame, schema: StructType, column: str, lower=N
 
     from cpp_parquet_spark.stats import order_key
 
-    plans = {p.dotted: p for p in plan_from_schema(to_arrow_schema(schema))}
+    plans = {p.dotted: p for p in plan_from_spark_schema(schema)}
     if column not in plans:
         raise KeyError(f"unknown leaf column {column!r}; have {sorted(plans)}")
     dtype = plans[column].arrow_type
@@ -544,7 +540,6 @@ def partition_for_encoding(
 
 def encode_pipeline(
     df: DataFrame,
-    codec: str = "auto",
     keys: tuple[str, ...] = ("lang", "repo"),
     num_partitions: int | None = None,
     chunk_rows: int = DEFAULT_CHUNK_ROWS,
@@ -553,18 +548,15 @@ def encode_pipeline(
     """Range-partition by ``keys`` (:func:`partition_for_encoding`), then
     encode: the flagship path.
 
-    With ``codec == "auto"`` and no ``codec_hints``, the codec selector
-    runs once driver-side on a prefix sample and seeds every task with
-    the result (see :func:`presample_codecs`).  Pass ``codec_hints`` to
-    reuse hints across runs over the same data (the hints are a
-    driver-side constant: compute once, encode for hours); then no
-    Spark job runs until the caller's action."""
-    hints = codec_hints if codec_hints is not None else (
-        presample_codecs(df) if codec == "auto" else None
-    )
+    Without ``codec_hints``, the codec selector runs once driver-side
+    on a prefix sample and seeds every task with the result (see
+    :func:`presample_codecs`).  Pass ``codec_hints`` to reuse hints
+    across runs over the same data (the hints are a driver-side
+    constant: compute once, encode for hours); then no Spark job runs
+    until the caller's action."""
+    hints = codec_hints if codec_hints is not None else presample_codecs(df)
     return encode_dataframe(
         partition_for_encoding(df, keys=keys, num_partitions=num_partitions),
-        codec=codec,
         chunk_rows=chunk_rows,
         codec_hints=hints,
     )

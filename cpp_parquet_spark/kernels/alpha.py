@@ -11,7 +11,7 @@ with two table lookups per byte.
 Applicable when a chunk's distinct byte values <= 16.
 
 Layout: u8 alphabet_size | alphabet bytes | u8 bit_width |
-u32 forblob_len | FOR(per-string byte lengths) | packed symbol bits
+section(FOR(per-string byte lengths)) | packed symbol bits
 """
 
 from __future__ import annotations
@@ -19,7 +19,7 @@ from __future__ import annotations
 import numpy as np
 import pyarrow as pa
 
-from cpp_parquet_spark.kernels.bitpack import bit_width_for, pack_bits, unpack_bits
+from cpp_parquet_spark.kernels.bitpack import bit_width_for, pack_bits, put_section, take_section, unpack_bits
 from cpp_parquet_spark.kernels.forpack import decode_for, encode_for
 from cpp_parquet_spark.kernels.plain import _byte_components
 
@@ -51,9 +51,7 @@ def encode_alpha(values: pa.Array) -> bytes:
     out.append(len(alphabet))
     out += alphabet
     out.append(width)
-    lblob = encode_for(lengths) if len(lengths) else b""
-    out += len(lblob).to_bytes(4, "little")
-    out += lblob
+    put_section(out, encode_for(lengths) if len(lengths) else b"")
     out += pack_bits(symbols, width)
     return bytes(out)
 
@@ -64,11 +62,8 @@ def decode_alpha(buf: bytes, n: int, arrow_type: pa.DataType) -> pa.Array:
     alphabet = np.frombuffer(mv[1 : 1 + asize], dtype=np.uint8)
     pos = 1 + asize
     width = mv[pos]
-    pos += 1
-    llen = int.from_bytes(mv[pos : pos + 4], "little")
-    pos += 4
-    lengths = decode_for(bytes(mv[pos : pos + llen]), n) if n else np.zeros(0, np.int64)
-    pos += llen
+    lblob, pos = take_section(mv, pos + 1)
+    lengths = decode_for(lblob, n) if n else np.zeros(0, np.int64)
     total = int(lengths.sum())
     symbols = unpack_bits(np.frombuffer(mv[pos:], dtype=np.uint8), width, total).astype(np.int64)
     payload = alphabet[symbols] if total else np.zeros(0, np.uint8)

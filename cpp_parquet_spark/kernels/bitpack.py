@@ -142,3 +142,21 @@ def decode_vlq(buf: bytes | memoryview, pos: int) -> tuple[int, int]:
         if not (b & 0x80):
             return result, pos
         shift += 7
+
+
+def put_section(out: bytearray, blob: bytes) -> None:
+    """Append ``blob`` framed by its u32 little-endian length (the
+    length-prefixed section of Flush, parquet-column.cc:341-365)."""
+    out += len(blob).to_bytes(4, "little")
+    out += blob
+
+
+def take_section(mv: memoryview, pos: int) -> tuple[memoryview, int]:
+    """Read the section :func:`put_section` framed at ``pos``; returns
+    (a view of its bytes, next_pos).  A length running past the buffer
+    is a truncated or corrupt stream and raises."""
+    start = pos + 4
+    end = start + int.from_bytes(mv[pos:start], "little")
+    if end > len(mv):
+        raise ValueError(f"truncated section: needs {end} bytes, buffer has {len(mv)}")
+    return mv[start:end], end

@@ -7,8 +7,9 @@ wire grammar of rle.encode_hybrid, which is also how Parquet's own
 RLE_DICTIONARY works.  Dictionary values are stored PLAIN
 (parquet-column.cc:238-258 layout for strings).
 
-Layout: u32 cardinality | PLAIN dict values | u8 index bit width |
-u32 index stream length | hybrid-RLE indices.
+Layout: u32 cardinality | section(PLAIN dict values) | u8 index bit
+width | section(hybrid-RLE indices), where section(x) is x behind its
+u32 length (``bitpack.put_section``).
 """
 
 from __future__ import annotations
@@ -16,7 +17,7 @@ from __future__ import annotations
 import numpy as np
 import pyarrow as pa
 
-from cpp_parquet_spark.kernels.bitpack import bit_width_for
+from cpp_parquet_spark.kernels.bitpack import bit_width_for, put_section, take_section
 from cpp_parquet_spark.kernels.plain import decode_plain, encode_plain
 from cpp_parquet_spark.kernels.rle import decode_hybrid, encode_hybrid
 
@@ -35,30 +36,20 @@ def encode_dict(values: pa.Array, physical: str) -> bytes:
     if len(values) == 0:
         return (0).to_bytes(4, "little")
     dictionary, indices, width = dictionary_split(values)
-    card = len(dictionary)
-    dict_bytes = encode_plain(dictionary, physical)
-    idx_bytes = encode_hybrid(indices, width)
-    out = bytearray(card.to_bytes(4, "little"))
-    out += len(dict_bytes).to_bytes(4, "little")
-    out += dict_bytes
+    out = bytearray(len(dictionary).to_bytes(4, "little"))
+    put_section(out, encode_plain(dictionary, physical))
     out.append(width)
-    out += len(idx_bytes).to_bytes(4, "little")
-    out += idx_bytes
+    put_section(out, encode_hybrid(indices, width))
     return bytes(out)
 
 
-def decode_dict(buf: bytes, n: int, physical: str, arrow_type: pa.DataType) -> pa.Array:
+def decode_dict(buf: bytes | memoryview, n: int, physical: str, arrow_type: pa.DataType) -> pa.Array:
     if n == 0:
         return pa.array([], type=arrow_type)
     mv = memoryview(buf)
     card = int.from_bytes(mv[0:4], "little")
-    dlen = int.from_bytes(mv[4:8], "little")
-    pos = 8
-    dictionary = decode_plain(bytes(mv[pos : pos + dlen]), card, physical, arrow_type)
-    pos += dlen
-    width = mv[pos]
-    pos += 1
-    ilen = int.from_bytes(mv[pos : pos + 4], "little")
-    pos += 4
-    indices = decode_hybrid(mv[pos : pos + ilen], width, n).astype(np.int64)
+    dict_bytes, pos = take_section(mv, 4)
+    dictionary = decode_plain(bytes(dict_bytes), card, physical, arrow_type)
+    idx_bytes, _ = take_section(mv, pos + 1)
+    indices = decode_hybrid(idx_bytes, mv[pos], n).astype(np.int64)
     return dictionary.take(pa.array(indices))

@@ -27,8 +27,8 @@ the ratio killer).
 
 Chunk layout:
   u8 n_codes | u8 sym_len[n_codes] | symbol blob |
-  u32 stream_len | code stream (escape = 0xFF + raw byte) |
-  u32 n_strings | u32 forblob_len | FOR blob of per-string stream bytes
+  section(code stream; escape = 0xFF + raw byte) |
+  u32 n_strings | section(FOR of per-string stream bytes)
 """
 
 from __future__ import annotations
@@ -36,6 +36,7 @@ from __future__ import annotations
 import numpy as np
 import pyarrow as pa
 
+from cpp_parquet_spark.kernels.bitpack import put_section, take_section
 from cpp_parquet_spark.kernels.forpack import decode_for, encode_for
 from cpp_parquet_spark.kernels.plain import _byte_components
 
@@ -275,12 +276,9 @@ def encode_fsst(values: pa.Array) -> bytes:
     out.append(len(table))
     out += np.array([len(s) for s in table], dtype=np.uint8).tobytes()
     out += b"".join(table)
-    out += len(stream).to_bytes(4, "little")
-    out += stream.tobytes()
+    put_section(out, stream.tobytes())
     out += n.to_bytes(4, "little")
-    len_blob = encode_for(str_lens) if n else b""
-    out += len(len_blob).to_bytes(4, "little")
-    out += len_blob
+    put_section(out, encode_for(str_lens) if n else b"")
     return bytes(out)
 
 
@@ -292,15 +290,11 @@ def decode_fsst(buf: bytes, n: int, arrow_type: pa.DataType) -> pa.Array:
     blob_len = int(lens.sum())
     blob = np.frombuffer(mv[pos : pos + blob_len], dtype=np.uint8)
     pos += blob_len
-    stream_len = int.from_bytes(mv[pos : pos + 4], "little")
-    pos += 4
-    stream = np.frombuffer(mv[pos : pos + stream_len], dtype=np.uint8)
-    pos += stream_len
+    stream_bytes, pos = take_section(mv, pos)
+    stream = np.frombuffer(stream_bytes, dtype=np.uint8)
     n_strings = int.from_bytes(mv[pos : pos + 4], "little")
-    pos += 4
-    fl = int.from_bytes(mv[pos : pos + 4], "little")
-    pos += 4
-    str_lens = decode_for(bytes(mv[pos : pos + fl]), n_strings) if n_strings else np.zeros(0, np.int64)
+    len_blob, _ = take_section(mv, pos + 4)
+    str_lens = decode_for(len_blob, n_strings) if n_strings else np.zeros(0, np.int64)
     assert n_strings == n, f"fsst chunk has {n_strings} strings, expected {n}"
 
     m = len(stream)

@@ -22,7 +22,7 @@ from dataclasses import dataclass
 import numpy as np
 import pyarrow as pa
 
-from cpp_parquet_spark.kernels.bitpack import bit_width_for
+from cpp_parquet_spark.kernels.bitpack import bit_width_for, put_section
 from cpp_parquet_spark.kernels.rle import encode_hybrid
 from cpp_parquet_spark.schema_plan import ColumnPlan
 
@@ -49,8 +49,11 @@ def encode_levels(sh: ShreddedColumn) -> tuple[bytes, bytes]:
 def framed_levels(sh: ShreddedColumn) -> bytes:
     """[u32 length + rep][u32 length + def], each only if the column has
     that stream (Flush framing, parquet-column.cc:341-365, 436-443)."""
-    has = (sh.plan.max_rep > 0, sh.plan.max_def > 0)
-    return b"".join(len(s).to_bytes(4, "little") + s for s, h in zip(encode_levels(sh), has) if h)
+    out = bytearray()
+    for stream, has in zip(encode_levels(sh), (sh.plan.max_rep > 0, sh.plan.max_def > 0)):
+        if has:
+            put_section(out, stream)
+    return bytes(out)
 
 
 def _validity(arr: pa.Array) -> np.ndarray:

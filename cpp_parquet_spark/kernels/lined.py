@@ -13,9 +13,9 @@ is dictionary.take(indices) whose values buffer IS the rebuilt payload
 (no join at all; doc offsets are one reduceat over line lengths).  The
 hash pass of dictionary_encode is the only full-payload scan left.
 
-Layout: u32 n_docs | u32 forblob_len | FOR(line counts per doc) |
-u32 cardinality | u32 dict_len | PLAIN dict lines (incl. their '\\n') |
-u8 idx_width | u32 idx_len | hybrid-RLE line indices
+Layout: u32 n_docs | section(FOR(line counts per doc)) | the ``dict``
+codec's bytes over the flat lines (incl. their '\\n').  So this codec is
+``dict`` over lines: one dictionary path, one byte layout.
 """
 
 from __future__ import annotations
@@ -23,10 +23,10 @@ from __future__ import annotations
 import numpy as np
 import pyarrow as pa
 
-from cpp_parquet_spark.kernels.bitpack import bit_width_for
+from cpp_parquet_spark.kernels.bitpack import put_section, take_section
+from cpp_parquet_spark.kernels.dictionary import decode_dict, encode_dict
 from cpp_parquet_spark.kernels.forpack import decode_for, encode_for
-from cpp_parquet_spark.kernels.plain import _byte_components, decode_plain, encode_plain
-from cpp_parquet_spark.kernels.rle import decode_hybrid, encode_hybrid
+from cpp_parquet_spark.kernels.plain import _byte_components
 
 
 def _lines_zero_copy(values: pa.Array) -> tuple[pa.Array, np.ndarray]:
@@ -59,24 +59,9 @@ def encode_lined(values: pa.Array) -> bytes:
     out = bytearray(n.to_bytes(4, "little"))
     if n == 0:
         return bytes(out)
-    flat, counts = _lines_zero_copy(values)
-    denc = flat.dictionary_encode()
-    dictionary = denc.dictionary
-    indices = np.asarray(denc.indices, dtype=np.uint64)
-    card = len(dictionary)
-    width = bit_width_for(max(card - 1, 0))
-
-    cblob = encode_for(counts)
-    out += len(cblob).to_bytes(4, "little")
-    out += cblob
-    dict_blob = encode_plain(dictionary, "BYTE_ARRAY")
-    out += card.to_bytes(4, "little")
-    out += len(dict_blob).to_bytes(4, "little")
-    out += dict_blob
-    idx_blob = encode_hybrid(indices, width)
-    out.append(width)
-    out += len(idx_blob).to_bytes(4, "little")
-    out += idx_blob
+    lines, counts = _lines_zero_copy(values)
+    put_section(out, encode_for(counts))
+    out += encode_dict(lines, "BYTE_ARRAY")
     return bytes(out)
 
 
@@ -86,32 +71,19 @@ def decode_lined(buf: bytes, n: int, arrow_type: pa.DataType) -> pa.Array:
     assert n_docs == n
     if n == 0:
         return pa.array([], type=arrow_type)
-    pos = 4
-    clen = int.from_bytes(mv[pos : pos + 4], "little")
-    pos += 4
-    counts = decode_for(bytes(mv[pos : pos + clen]), n)
-    pos += clen
-    card = int.from_bytes(mv[pos : pos + 4], "little")
-    dlen = int.from_bytes(mv[pos + 4 : pos + 8], "little")
-    pos += 8
-    dictionary = decode_plain(bytes(mv[pos : pos + dlen]), card, "BYTE_ARRAY", pa.large_binary())
-    pos += dlen
-    width = mv[pos]
-    pos += 1
-    ilen = int.from_bytes(mv[pos + 0 : pos + 4], "little")
-    pos += 4
+    counts_blob, pos = take_section(mv, 4)
+    counts = decode_for(counts_blob, n)
     total_lines = int(counts.sum())
-    indices = decode_hybrid(mv[pos : pos + ilen], width, total_lines).astype(np.int64)
-
-    # lines carry their separators, so take() already materializes the
-    # payload verbatim — its values buffer IS the decoded bytes; only
-    # the per-doc offsets need computing (one reduceat)
-    flat = dictionary.take(pa.array(indices))
+    # lines carry their separators, so the dictionary's take() already
+    # materializes the payload verbatim — its values buffer IS the
+    # decoded bytes; only the per-doc offsets need computing (one
+    # reduceat; every doc has at least one line)
+    flat = decode_dict(mv[pos:], total_lines, "BYTE_ARRAY", pa.large_binary())
     bufs = flat.buffers()
     loff = np.frombuffer(bufs[1], dtype=np.int64)[flat.offset : flat.offset + total_lines + 1]
     line_lens = loff[1:] - loff[:-1]
     line_starts_per_doc = np.concatenate(([0], np.cumsum(counts)))[:-1].astype(np.int64)
-    doc_lens = np.add.reduceat(line_lens, line_starts_per_doc) if total_lines else np.zeros(n, np.int64)
+    doc_lens = np.add.reduceat(line_lens, line_starts_per_doc)
     doc_offsets = np.concatenate(([0], np.cumsum(doc_lens))).astype(np.int64) + int(loff[0])
     payload_buf = bufs[2] if bufs[2] is not None else pa.py_buffer(b"")
     out = pa.LargeBinaryArray.from_buffers(

@@ -26,6 +26,8 @@ from __future__ import annotations
 import numpy as np
 import pyarrow as pa
 
+from cpp_parquet_spark.kernels.bitpack import put_section, take_section
+
 _FIXED_NP = {
     "INT32": np.dtype("<i4"),
     "INT64": np.dtype("<i8"),
@@ -100,9 +102,8 @@ def encode_plain(values: pa.Array, physical: str) -> bytes:
     from cpp_parquet_spark.kernels.forpack import encode_for
 
     lengths, payload = _byte_components(values)
-    len_blob = encode_for(lengths)
-    out = bytearray(len(len_blob).to_bytes(4, "little"))
-    out += len_blob
+    out = bytearray()
+    put_section(out, encode_for(lengths))
     out += payload.tobytes()
     return bytes(out)
 
@@ -129,13 +130,13 @@ def decode_plain(buf: bytes, n: int, physical: str, arrow_type: pa.DataType) -> 
     from cpp_parquet_spark.kernels.forpack import decode_for
 
     mv = memoryview(buf)
-    ll = int.from_bytes(mv[0:4], "little")
-    lengths = decode_for(bytes(mv[4 : 4 + ll]), n)
+    len_blob, pos = take_section(mv, 0)
+    lengths = decode_for(len_blob, n)
     offsets = np.concatenate(([0], np.cumsum(lengths))).astype(np.int64)
     out = pa.LargeBinaryArray.from_buffers(
         pa.large_binary(),
         n,
-        [None, pa.py_buffer(offsets.tobytes()), pa.py_buffer(bytes(mv[4 + ll :]))],
+        [None, pa.py_buffer(offsets.tobytes()), pa.py_buffer(bytes(mv[pos:]))],
     )
     return out.cast(arrow_type)
 

@@ -5,8 +5,7 @@ after the engine's repartition-by-(repo, lang), which makes these
 columns locally constant).  Run values are stored PLAIN; run lengths
 are frame-of-reference bit-packed.
 
-Layout: u32 n_runs | FOR blob of run lengths (u32 len prefix) |
-PLAIN run values.
+Layout: u32 n_runs | section(FOR of run lengths) | PLAIN run values.
 """
 
 from __future__ import annotations
@@ -15,6 +14,7 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 
+from cpp_parquet_spark.kernels.bitpack import put_section, take_section
 from cpp_parquet_spark.kernels.forpack import decode_for, encode_for
 from cpp_parquet_spark.kernels.plain import decode_plain, encode_plain
 
@@ -35,12 +35,9 @@ def encode_rle_runs(values: pa.Array, physical: str) -> bytes:
     n_runs = len(starts)
     lens = np.diff(np.concatenate((starts, [n]))).astype(np.int64)
     run_values = values.take(pa.array(starts)) if n else values
-    len_blob = encode_for(lens) if n else b""
-    val_blob = encode_plain(run_values, physical)
     out = bytearray(n_runs.to_bytes(4, "little"))
-    out += len(len_blob).to_bytes(4, "little")
-    out += len_blob
-    out += val_blob
+    put_section(out, encode_for(lens) if n else b"")
+    out += encode_plain(run_values, physical)
     return bytes(out)
 
 
@@ -49,9 +46,9 @@ def decode_rle_runs(buf: bytes, n: int, physical: str, arrow_type: pa.DataType) 
     n_runs = int.from_bytes(mv[0:4], "little")
     if n_runs == 0:
         return pa.array([], type=arrow_type)
-    llen = int.from_bytes(mv[4:8], "little")
-    lens = decode_for(bytes(mv[8 : 8 + llen]), n_runs)
-    run_values = decode_plain(bytes(mv[8 + llen :]), n_runs, physical, arrow_type)
+    len_blob, pos = take_section(mv, 4)
+    lens = decode_for(len_blob, n_runs)
+    run_values = decode_plain(bytes(mv[pos:]), n_runs, physical, arrow_type)
     idx = np.repeat(np.arange(n_runs, dtype=np.int64), lens)
     return run_values.take(pa.array(idx))
 

@@ -46,7 +46,7 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import IntegerType, LongType, StringType, StructField, StructType
 
 from cpp_parquet_spark.engine import CHUNK_SCHEMA, DEFAULT_CHUNK_ROWS, decode_dataframe, encode_chunks, row_hash
-from cpp_parquet_spark.schema_plan import plan_from_schema
+from cpp_parquet_spark.schema_plan import plan_from_spark_schema
 
 class ConcurrentCommitError(RuntimeError):
     """Raised when the snapshot-commit CAS loses to a concurrent writer
@@ -130,7 +130,6 @@ class EncodeJob:
         base_dir: str,
         num_parts: int = 64,
         keys: tuple[str, ...] = ("lang", "repo"),
-        codec: str = "auto",
         chunk_rows: int = DEFAULT_CHUNK_ROWS,
         snapshot_id: str = "snap-0",
     ) -> None:
@@ -139,7 +138,6 @@ class EncodeJob:
         self.lineage_dir = os.path.join(base_dir, "lineage")
         self.num_parts = num_parts
         self.keys = keys
-        self.codec = codec
         self.chunk_rows = chunk_rows
         self.snapshot_id = snapshot_id
 
@@ -284,12 +282,12 @@ class EncodeJob:
         # driver pid separates two racers, which read the same catalog
         # and so compute the same attempt number.
         shuffled = pending.repartition(self.num_parts, F.col("_part")).sortWithinPartitions("_part")
-        plans = plan_from_schema(to_arrow_schema(df.schema))
-        codec, chunk_rows, chunks_dir = self.codec, self.chunk_rows, self.chunks_dir
+        plans = plan_from_spark_schema(df.schema)
+        chunk_rows, chunks_dir = self.chunk_rows, self.chunks_dir
         token = f"part-{self.snapshot_id}-a{attempt}-p{os.getpid()}"
 
         def write_parts(batches):
-            chunks = encode_chunks(batches, plans, codec, chunk_rows, part_col="_part")
+            chunks = encode_chunks(batches, plans, chunk_rows, part_col="_part")
             return _write_files(chunks, chunks_dir, token)
 
         t0 = time.time()

@@ -24,6 +24,17 @@ from cpp_parquet_spark.kernels.rle_runs import run_count
 
 _SAMPLE_ROWS = 2048
 
+# What a codec must beat PLAIN by, as a fraction of PLAIN's size, both
+# to be selected and to be kept when a chunk carries it over from a
+# hint or the per-task memo: a ~5% win (e.g. fsst's bit-packed lengths
+# vs PLAIN's u32 prefixes on random data) doesn't pay for the costlier
+# codecs' encode/decode time.  Codecs not listed need only tie PLAIN.
+MARGIN = {"fsst": 0.85, "lined": 0.9, "dict": 0.95, "rle": 0.95, "for": 0.98, "alpha": 0.95}
+
+# What an encoder raises when a codec does not fit the data (e.g. an
+# alphabet overflow on a chunk whose sample fit).
+CODEC_ERRORS = (ValueError, TypeError, pa.lib.ArrowNotImplementedError, pa.lib.ArrowInvalid)
+
 
 @dataclass
 class ColumnStats:
@@ -144,14 +155,10 @@ def shortlist(stats: ColumnStats, physical: str) -> list[str]:
     return cands
 
 
-def select_codec(values: pa.Array, physical: str, mode: str = "auto") -> str:
-    """Pick the codec for one column chunk.
-
-    mode='auto': rule shortlist, then trial-encode a sample and keep the
-    smallest output (deterministic).  mode=<codec name>: forced.
-    """
-    if mode != "auto":
-        return mode
+def select_codec(values: pa.Array, physical: str) -> str:
+    """Pick the codec for one column chunk: rule shortlist, then
+    trial-encode a sample and keep the smallest output that clears its
+    :data:`MARGIN` over PLAIN (deterministic)."""
     stats = column_stats(values, physical)
     cands = shortlist(stats, physical)
     if len(cands) == 1:
@@ -172,10 +179,6 @@ def select_codec(values: pa.Array, physical: str, mode: str = "auto") -> str:
     else:
         sample = values.slice(0, min(n, n_trial))
     base = plain_size(sample, physical)
-    # expensive codecs must clear a margin over PLAIN; a ~5% win (e.g.
-    # fsst's bit-packed lengths vs PLAIN's u32 prefixes on random data)
-    # doesn't pay for encode/decode cost
-    margin = {"fsst": 0.85, "lined": 0.9, "dict": 0.95, "rle": 0.95, "for": 0.98, "alpha": 0.95}
     best, best_size = "plain", base
     for c in cands:
         if c == "plain":
@@ -185,8 +188,8 @@ def select_codec(values: pa.Array, physical: str, mode: str = "auto") -> str:
             # expensive fsst trial — it rarely beats a 2x-winning lined/dict
         try:
             sz = len(_encode_values(sample, c, physical))
-        except (ValueError, TypeError, pa.lib.ArrowNotImplementedError, pa.lib.ArrowInvalid):
+        except CODEC_ERRORS:
             continue
-        if sz < best_size and sz < base * margin.get(c, 1.0):
+        if sz < best_size and sz < base * MARGIN.get(c, 1.0):
             best, best_size = c, sz
     return best

@@ -34,7 +34,7 @@ def main() -> None:
         df = source_repos_from_documents(spark, sf_dir)
         t0 = time.time()
         totals = (
-            encode_pipeline(df, codec="auto", num_partitions=workers * 4)
+            encode_pipeline(df, num_partitions=workers * 4)
             .groupBy("column", "codec")
             .agg(
                 F.sum("plain_bytes").alias("plain"),

@@ -94,6 +94,14 @@ def test_chunk_lined_empty_and_trailing_newlines():
     _chunk_rt(pa.field("s", pa.string(), nullable=False), data, "lined")
 
 
+def test_truncated_chunk_fails_loudly():
+    """A chunk cut short raises instead of decoding a shorter section."""
+    blob, _ = _chunk_rt(pa.field("s", pa.string()), [f"v{i % 7}" for i in range(500)], "dict")
+    plan = plan_from_schema(pa.schema([pa.field("s", pa.string())]))[0]
+    with pytest.raises(ValueError, match="truncated section"):
+        deserialize_chunk(blob[:-1], plan)
+
+
 def test_chunk_booleans_bitpack():
     data = [bool((i * 7) % 3) for i in range(1000)]
     f = pa.field("b", pa.bool_(), nullable=False)
@@ -148,7 +156,3 @@ def test_selector_real_columns():
     n_chars = t.column("n_chars").combine_chunks()
     assert select_codec(n_chars, "INT64") in ("for", "dict", "plain")
 
-
-def test_forced_codec_mode():
-    arr = pa.array(["a", "b"])
-    assert select_codec(arr, "BYTE_ARRAY", mode="fsst") == "fsst"

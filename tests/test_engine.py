@@ -25,7 +25,7 @@ from cpp_parquet_spark.schema_plan import plan_from_schema
 
 
 def _roundtrip_check(df, keys):
-    chunks = encode_dataframe(df, codec="auto").cache()
+    chunks = encode_dataframe(df).cache()
     decoded = decode_dataframe(chunks, df.schema)
     a = df.withColumn("_sha", F.sha2(F.concat_ws("\x1f", *[F.col(c).cast("string") for c in df.columns]), 256))
     b = decoded.withColumn("_sha", F.sha2(F.concat_ws("\x1f", *[F.col(c).cast("string") for c in df.columns]), 256))
@@ -91,7 +91,7 @@ def test_chunk_rows_caps_chunks_inside_a_batch(spark):
 
 def test_chunk_rows_below_one_is_refused():
     batch = pa.RecordBatch.from_pydict({"id": pa.array([1, 2, 3], pa.int64())})
-    chunks = encode_chunks([batch], plan_from_schema(batch.schema), "auto", 0)
+    chunks = encode_chunks([batch], plan_from_schema(batch.schema), 0)
     with pytest.raises(ValueError, match="chunk_rows"):
         next(chunks)
 
@@ -204,7 +204,7 @@ def test_list_of_struct_roundtrip(spark):
         .alias("s"),
     )
     nested = base.groupBy("k").agg(F.collect_list(F.struct("v", "w", "s")).alias("items"))
-    dec = decode_dataframe(encode_dataframe(nested, codec="auto"), nested.schema)
+    dec = decode_dataframe(encode_dataframe(nested), nested.schema)
     back = dec.select("k", F.explode("items").alias("i")).select(
         "k", F.col("i.v").alias("v"), F.col("i.w").alias("w"), F.col("i.s").alias("s")
     )
@@ -271,7 +271,7 @@ def test_prune_chunks_correct_and_effective(spark):
         .repartitionByRange(4, "k")
         .sortWithinPartitions("k")
     )
-    chunks = encode_dataframe(df, codec="auto", chunk_rows=2048)
+    chunks = encode_dataframe(df, chunk_rows=2048)
     chunks.cache()
     total_chunks = chunks.select("part_id", "chunk_id").distinct().count()
     pruned = prune_chunks(chunks, df.schema, "k", lower=10_000, upper=12_000)
@@ -303,7 +303,7 @@ def test_prune_chunks_all_null_and_no_bounds(spark):
     df = spark.range(0, 1000).select(
         F.lit(None).cast("long").alias("n"), F.col("id").alias("k")
     )
-    chunks = encode_dataframe(df, codec="auto", chunk_rows=256)
+    chunks = encode_dataframe(df, chunk_rows=256)
     # range predicate on an all-null column prunes everything (NULL
     # satisfies no range predicate)
     assert prune_chunks(chunks, df.schema, "n", lower=0).count() == 0
@@ -329,7 +329,7 @@ def test_prune_chunks_keeps_unbounded_above_stats(spark):
     # at batch granularity)
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "1")
     try:
-        chunks = encode_dataframe(schema_df, codec="auto", chunk_rows=1).cache()
+        chunks = encode_dataframe(schema_df, chunk_rows=1).cache()
         chunks.count()
     finally:
         spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
@@ -352,7 +352,7 @@ def test_prune_chunks_vacuous_upper_and_unorderable_key(spark):
     # order_key itself: unorderable dtype -> None
     assert order_key([1, 2], pa.list_(pa.int64())) is None
     df = spark.createDataFrame([(1, "a")], "k long, s string")
-    chunks = encode_dataframe(df, codec="auto", chunk_rows=8)
+    chunks = encode_dataframe(df, chunk_rows=8)
     # an upper bound of 0xFF-bytes rounds up past every key: vacuous,
     # keeps everything rather than pruning everything
     kept = prune_chunks(chunks, df.schema, "s", upper=b"\xff" * 70)
@@ -378,16 +378,16 @@ def test_presample_codecs_and_hinted_encode(spark, sf_small):
     assert {"repo", "lang"} <= set(hints) <= {"repo", "path", "commit", "lang"}
     assert all(isinstance(c, str) and c for c in hints.values())
 
-    chunks = encode_dataframe(df.repartition(2), codec="auto", codec_hints=hints)
+    chunks = encode_dataframe(df.repartition(2), codec_hints=hints)
     back = decode_dataframe(chunks, df.schema)
     assert sorted(back.collect()) == sorted(df.collect())
 
-    # a nonsense hint (plain works everywhere, so use a codec that will
-    # lose to plain on incompressible data): drift guard must reselect
+    # a nonsense hint: rle shrinks content by ~0.1%, short of its
+    # margin over PLAIN, so the drift guard must reselect
     bad = dict(hints, content="rle")
-    chunks_bad = encode_dataframe(df.repartition(2), codec="auto", codec_hints=bad)
-    used = {r["column"]: r["codec"] for r in chunks_bad.select("column", "codec").distinct().collect()}
-    assert used["content"] != "rle" or True  # decode correctness is the real gate
+    chunks_bad = encode_dataframe(df.repartition(2), codec_hints=bad)
+    used = {r["codec"] for r in chunks_bad.filter(F.col("column") == "content").select("codec").collect()}
+    assert "rle" not in used, used
     back_bad = decode_dataframe(chunks_bad, df.schema)
     assert sorted(back_bad.collect()) == sorted(df.collect())
 
@@ -408,10 +408,24 @@ def test_hinted_fsst_cap_gated_on_big_chunks():
     tbl = pa.table({"content": vals})
     plans = plan_from_schema(tbl.schema)
     memo = {"content": "fsst"}
-    batch = _encode_table(tbl, plans, "auto", 0, 0, memo=memo)
+    batch = _encode_table(tbl, plans, 0, 0, memo=memo)
     used = batch.column(batch.schema.get_field_index("codec"))[0].as_py()
     assert used != "fsst", used
     assert memo["content"] == used  # memo updated to the reselected codec
+
+
+def test_carried_codec_that_raises_is_reselected():
+    """A carried codec that cannot encode the chunk (alpha over a
+    17-byte alphabet) is reselected, not silently replaced by PLAIN."""
+    from cpp_parquet_spark.engine import _encode_table
+    from cpp_parquet_spark.schema_plan import plan_from_schema
+
+    langs = ["python", "javascript", "rust", "go", "kotlin"]
+    tbl = pa.table({"lang": pa.array([langs[i % 5] for i in range(4096)])})
+    memo = {"lang": "alpha"}
+    batch = _encode_table(tbl, plan_from_schema(tbl.schema), 0, 0, memo=memo)
+    assert batch.column("codec").to_pylist() == ["dict"]
+    assert memo["lang"] == "dict"
 
 
 def test_prune_chunks_keeps_stats_failed_chunks(spark):
@@ -422,7 +436,7 @@ def test_prune_chunks_keeps_stats_failed_chunks(spark):
     from cpp_parquet_spark.engine import decode_dataframe, encode_dataframe, prune_chunks
 
     df = spark.range(0, 2000).select(F.col("id").alias("k"), (F.col("id") * 2).alias("v"))
-    chunks = encode_dataframe(df, codec="auto", chunk_rows=512)
+    chunks = encode_dataframe(df, chunk_rows=512)
     # simulate Arrow min_max unavailability: null out every stat key
     # while the data stays live
     broken = chunks.withColumn(
@@ -455,7 +469,7 @@ def test_decode_dataframe_predicate_prunes_before_python(spark):
         .repartitionByRange(4, "k")
         .sortWithinPartitions("k")
     )
-    chunks = encode_dataframe(df, codec="auto", chunk_rows=2048)
+    chunks = encode_dataframe(df, chunk_rows=2048)
     chunks.cache()
     decoded = decode_dataframe(chunks, df.schema, predicate=("k", 5_000, 6_000))
     plan = decoded._jdf.queryExecution().executedPlan().toString()
@@ -493,7 +507,7 @@ def test_decode_grouped_narrow_chain_no_exchange(spark):
         (F.col("id") % 7).cast("double").alias("v"),
         F.concat(F.lit("row-"), F.col("id").cast("string")).alias("s"),
     ).repartition(4)
-    enc = encode_dataframe(df, codec="auto", chunk_rows=4096)
+    enc = encode_dataframe(df, chunk_rows=4096)
     decoded = decode_dataframe(enc, df.schema, grouped=True)
     plan = decoded._jdf.queryExecution().executedPlan().toString()
     # one Exchange from the repartition(4); none between the MapInArrows
@@ -521,7 +535,7 @@ def test_decode_grouped_window_prune_matches_semi_join(spark):
         .repartitionByRange(4, "k")
         .sortWithinPartitions("k")
     )
-    chunks = encode_dataframe(df, codec="auto", chunk_rows=2048)
+    chunks = encode_dataframe(df, chunk_rows=2048)
     decoded = decode_dataframe(chunks, df.schema, predicate=("k", 5_000, 6_000), grouped=True)
     plan = decoded._jdf.queryExecution().executedPlan().toString()
     # exactly ONE encode subtree in the plan (the semi-join form had two)

@@ -146,7 +146,7 @@ def test_map_spark_engine_roundtrip(spark):
         )
         .repartition(2)
     )
-    chunks = encode_dataframe(df, codec="auto", chunk_rows=128)
+    chunks = encode_dataframe(df, chunk_rows=128)
     decoded = decode_dataframe(chunks, df.schema)
     got = {r["k"]: r["attrs"] for r in decoded.collect()}
     exp = {r["k"]: r["attrs"] for r in df.collect()}
@@ -279,7 +279,7 @@ def test_decimal_spark_engine_roundtrip(spark):
         )
         .repartition(2)
     )
-    chunks = encode_dataframe(df, codec="auto", chunk_rows=256)
+    chunks = encode_dataframe(df, chunk_rows=256)
     decoded = decode_dataframe(chunks, df.schema)
     got = decoded.agg(F.sum("amt").alias("s"), F.count("*").alias("n")).collect()[0]
     exp = df.agg(F.sum("amt").alias("s"), F.count("*").alias("n")).collect()[0]

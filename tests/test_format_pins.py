@@ -1,11 +1,11 @@
 """Byte-exact pins of the two write paths.
 
 A fixed table goes through ``write_table`` (every page/encoding switch)
-and through ``serialize_chunk`` (every integer/generic SGC codec); the
-sha256 of each output is compared with digests recorded from a known-good
-build.  Refactors of the encoders must keep these digests: a change here
-is a format change.  Uncompressed only (zlib output may vary by library
-version).
+and through ``serialize_chunk`` (every integer, generic and string SGC
+codec); the sha256 of each output is compared with digests recorded
+from a known-good build.  Refactors of the encoders must keep these
+digests: a change here is a format change.  Uncompressed only (zlib
+output may vary by library version).
 """
 
 import datetime as dt
@@ -64,7 +64,12 @@ _CHUNK_DIGESTS = {
     "delta": "2f6c80b5c5c59b5e074ceb38ac693b37b07ce3e18eeb5b6f87fb91d7a7c55f21",
     "dict": "75304ef3897998f90e80d9a588646fafe7d1b019f3385560d6b3853ec2a9783d",
     "rle": "ae9fff6c12b92d216a482bc8c95f8e0eaad9e35be6efb318d3cbfed2baab0230",
+    "lined": "04548d1131de947ba1d0f6e041353d3dbc132cbe3ab88a0d0a2e2bee9eea9249",
+    "alpha": "d6a2da483079bb1993c737bcf6bdd6763112e162cd96a083b82819f2e6efb2ea",
+    "fsst": "4e4c50986e17486a5fa700f8f9f071830499b7ae39ce9a583f7ef2ab7401becc",
 }
+
+_STRING_ONLY = ("lined", "alpha", "fsst")
 
 
 @pytest.mark.parametrize(
@@ -84,12 +89,14 @@ def test_write_table_bytes_pinned(version, use_dict, use_delta, tmp_path):
     assert digest == _WRITE_DIGESTS[(version, use_dict, use_delta)]
 
 
-@pytest.mark.parametrize("codec", ["plain", "for", "delta", "dict", "rle"])
+@pytest.mark.parametrize("codec", list(_CHUNK_DIGESTS))
 def test_serialize_chunk_bytes_pinned(codec):
     t = _table()
     h = hashlib.sha256()
     for plan in plan_from_schema(t.schema):
         if codec in ("for", "delta") and plan.physical not in ("INT32", "INT64"):
+            continue
+        if codec in _STRING_ONLY and plan.physical != "BYTE_ARRAY":
             continue
         sh = shred(t.column(plan.path[0]).combine_chunks(), plan)
         blob, _ = serialize_chunk(sh, codec)

@@ -66,7 +66,7 @@ def test_engine_tasks_drop_zip_finders(spark):
         plans = plan_from_schema(batches[0].schema)
         # a first pass does this worker's one-time imports, which may walk
         # zip entries on sys.path and cache finders for them
-        for _ in encode_chunks(batches, plans, "auto", 1 << 16):
+        for _ in encode_chunks(batches, plans, 1 << 16):
             pass
         tmp = tempfile.mkdtemp()
         archive = os.path.join(tmp, "zwpkg.zip")
@@ -80,7 +80,7 @@ def test_engine_tasks_drop_zip_finders(spark):
 
             assert first.VALUE == 1
             before = len(zip_finders())
-            for _ in encode_chunks(batches, plans, "auto", 1 << 16):
+            for _ in encode_chunks(batches, plans, 1 << 16):
                 pass
             after = zip_finders()
         finally:
