@@ -90,16 +90,22 @@ def _q_roundtrip_content(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_roundtrip_lineitem_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H-Q1-style aggregation computed on *decoded* lineitem — proves
-    numeric/timestamp fidelity through the codecs."""
+    numeric/timestamp fidelity through the codecs.  Prices and discounts
+    are exact at two decimals, so their sums are taken in DECIMAL(12,2)
+    and rounded before the cast to double: a rounded double sum depends
+    on the summation order, which differs between engines and task
+    counts."""
     df = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
     dec = _roundtrip(df)
+    price = F.col("l_extendedprice").cast("decimal(12,2)")
+    disc = F.col("l_discount").cast("decimal(12,2)")
     return (
         dec.filter(F.col("l_shipdate") <= F.lit("1998-09-02 00:00:00").cast("timestamp"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
             F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-            F.round(F.sum("l_extendedprice"), 2).alias("sum_base_price"),
-            F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("sum_disc_price"),
+            F.round(F.sum(price), 2).cast("double").alias("sum_base_price"),
+            F.round(F.sum(price * (1 - disc)), 2).cast("double").alias("sum_disc_price"),
             F.count("*").alias("count_order"),
         )
     )
@@ -750,8 +756,11 @@ def oracle_sql() -> dict[str, str]:
         "roundtrip_lineitem_agg": """
             SELECT l_returnflag, l_linestatus,
                    round(sum(l_quantity), 2) AS sum_qty,
-                   round(sum(l_extendedprice), 2) AS sum_base_price,
-                   round(sum(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
+                   CAST(round(sum(CAST(l_extendedprice AS DECIMAL(12,2))), 2)
+                        AS DOUBLE) AS sum_base_price,
+                   CAST(round(sum(CAST(l_extendedprice AS DECIMAL(12,2))
+                                  * (1 - CAST(l_discount AS DECIMAL(12,2)))), 2)
+                        AS DOUBLE) AS sum_disc_price,
                    count(*) AS count_order
             FROM lineitem
             WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'

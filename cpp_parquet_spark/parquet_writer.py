@@ -51,30 +51,31 @@ from cpp_parquet_spark.kernels.forpack import encode_delta_binary_packed, encode
 from cpp_parquet_spark.kernels.levels import ShreddedColumn, encode_levels, framed_levels, shred
 from cpp_parquet_spark.kernels.plain import encode_plain_parquet, physical_np
 from cpp_parquet_spark.kernels.rle import encode_hybrid
-from cpp_parquet_spark.schema_plan import ColumnPlan, plan_from_schema
+from cpp_parquet_spark.schema_plan import ColumnPlan, SchemaNode, parquet_schema
 
 MAGIC = b"PAR1"
 CREATED_BY = "cpp-parquet-spark"  # FileMetaData.created_by
 
 # parquet.thrift enums (public format spec)
-_T_BOOLEAN, _T_INT32, _T_INT64, _T_INT96, _T_FLOAT, _T_DOUBLE, _T_BYTE_ARRAY = 0, 1, 2, 3, 4, 5, 6
-_T_FLBA = 7
 _PHYS_CODE = {
-    "BOOLEAN": _T_BOOLEAN,
-    "INT32": _T_INT32,
-    "INT64": _T_INT64,
-    "FLOAT": _T_FLOAT,
-    "DOUBLE": _T_DOUBLE,
-    "BYTE_ARRAY": _T_BYTE_ARRAY,
-    "FIXED_LEN_BYTE_ARRAY": _T_FLBA,
+    "BOOLEAN": 0,
+    "INT32": 1,
+    "INT64": 2,
+    "INT96": 3,
+    "FLOAT": 4,
+    "DOUBLE": 5,
+    "BYTE_ARRAY": 6,
+    "FIXED_LEN_BYTE_ARRAY": 7,
 }
-_REQUIRED, _OPTIONAL, _REPEATED = 0, 1, 2
+_REPETITION = {"REQUIRED": 0, "OPTIONAL": 1, "REPEATED": 2}
 _ENC_PLAIN, _ENC_RLE = 0, 3
 _PAGE_DATA = 0
 _CODEC_UNCOMPRESSED = 0
-_CONV_UTF8, _CONV_MAP, _CONV_LIST, _CONV_DECIMAL, _CONV_DATE = 0, 1, 3, 5, 6
+_CONV_UTF8, _CONV_DECIMAL, _CONV_DATE = 0, 5, 6
 _CONV_TS_MILLIS, _CONV_TS_MICROS = 9, 10
 _CONV_INT = {"int8": 15, "int16": 16, "uint8": 11, "uint16": 12, "uint32": 13, "uint64": 14}
+# group annotation -> (converted_type, LogicalType union member fid)
+_GROUP_ANNOTATION = {"MAP": (1, 2), "LIST": (3, 3)}
 
 
 def _logical(member_fid: int, member: bytes = tc.struct()) -> bytes:
@@ -101,130 +102,65 @@ _TS_UNIT = {
 }
 
 
-def _leaf_type_info(t: pa.DataType) -> tuple[int, int | None, bytes | None]:
-    """(parquet type code, converted_type or None, LogicalType bytes or None)."""
-    if pa.types.is_boolean(t):
-        return _T_BOOLEAN, None, None
+def _leaf_annotation(t: pa.DataType) -> tuple[int | None, bytes | None]:
+    """(converted_type, LogicalType bytes) of a leaf; either may be None."""
     name = str(t)
     if name in _CONV_INT:
-        # unsigned ints annotate the physical type of their own width
-        # (UINT_32 may only annotate INT32); values are the raw
-        # two's-complement bit pattern
-        return (_T_INT64 if name == "uint64" else _T_INT32), _CONV_INT[name], None
-    if pa.types.is_int32(t):
-        return _T_INT32, None, None
-    if pa.types.is_int64(t):
-        return _T_INT64, None, None
-    if pa.types.is_float32(t):
-        return _T_FLOAT, None, None
-    if pa.types.is_float64(t):
-        return _T_DOUBLE, None, None
+        # unsigned ints annotate the physical type of their own width;
+        # values are the raw two's-complement bit pattern
+        return _CONV_INT[name], None
     if pa.types.is_string(t) or pa.types.is_large_string(t):
-        return _T_BYTE_ARRAY, _CONV_UTF8, _logical(1)  # STRING
-    if pa.types.is_binary(t) or pa.types.is_large_binary(t):
-        return _T_BYTE_ARRAY, None, None
-    if pa.types.is_fixed_size_binary(t):
-        # Avro `fixed` lowering; SchemaElement.type_length is emitted by
-        # _schema_elements from the Arrow byte_width
-        return _T_FLBA, None, None
+        return _CONV_UTF8, _logical(1)  # STRING
     if pa.types.is_decimal(t):
-        # DECIMAL as FLBA(16), big-endian unscaled two's complement
-        # (public spec LogicalTypes.md); scale/precision also go into
-        # SchemaElement fields 7/8 for old readers
+        # big-endian unscaled two's complement (public spec
+        # LogicalTypes.md); scale/precision also go into SchemaElement
+        # fields 7/8 for old readers
         dec = tc.struct(tc.f_i32(1, t.scale), tc.f_i32(2, t.precision))
-        return _T_FLBA, _CONV_DECIMAL, _logical(5, dec)
+        return _CONV_DECIMAL, _logical(5, dec)
     if pa.types.is_date32(t):
-        return _T_INT32, _CONV_DATE, _logical(6)  # DATE
+        return _CONV_DATE, _logical(6)  # DATE
     if pa.types.is_timestamp(t):
         utc = t.tz is not None
         unit = "us" if t.unit == "s" else t.unit  # seconds cast at write time
         unit_fid, conv = _TS_UNIT[unit]
-        return _T_INT64, (conv if utc else None), _logical_timestamp(utc, unit_fid)
-    raise TypeError(f"unsupported parquet leaf type: {t}")
+        return (conv if utc else None), _logical_timestamp(utc, unit_fid)
+    return None, None
 
 
-def _schema_elements(
-    schema: pa.Schema, int96_timestamps: bool = False
-) -> tuple[list[bytes], list[list[str]]]:
-    """Thrift SchemaElement list (DFS preorder, root first) + the
-    path_in_schema of each leaf, in the same leaf order as
-    plan_from_schema (both are DFS preorder over leaves)."""
-    elems: list[bytes] = [tc.struct(tc.f_binary(4, "schema"), tc.f_i32(5, len(schema)))]
-    leaf_paths: list[list[str]] = []
+def _leaf_type(plan: ColumnPlan, int96_timestamps: bool) -> str:
+    """Physical type a leaf is written as: the plan's, or legacy INT96
+    for timestamps when asked."""
+    return "INT96" if int96_timestamps and pa.types.is_timestamp(plan.arrow_type) else plan.physical
 
-    def walk(f: pa.Field, path: list[str]) -> None:
-        rep = _OPTIONAL if f.nullable else _REQUIRED
-        t = f.type
-        if pa.types.is_struct(t):
-            elems.append(
-                tc.struct(tc.f_i32(3, rep), tc.f_binary(4, f.name), tc.f_i32(5, t.num_fields))
-            )
-            for child in t:
-                walk(child, path + [f.name])
-            return
-        if pa.types.is_map(t):
-            # standard 3-level MAP group: repeated key_value with a
-            # required key and the value leaf/group
-            elems.append(
-                tc.struct(
-                    tc.f_i32(3, rep),
-                    tc.f_binary(4, f.name),
-                    tc.f_i32(5, 1),
-                    tc.f_i32(6, _CONV_MAP),
-                    tc.f_struct(10, _logical(2)),  # MAP
-                )
-            )
-            elems.append(
-                tc.struct(tc.f_i32(3, _REPEATED), tc.f_binary(4, "key_value"), tc.f_i32(5, 2))
-            )
-            walk(t.key_field.with_name("key"), path + [f.name, "key_value"])
-            walk(t.item_field.with_name("value"), path + [f.name, "key_value"])
-            return
-        if pa.types.is_list(t) or pa.types.is_large_list(t):
-            # standard 3-level LIST group
-            elems.append(
-                tc.struct(
-                    tc.f_i32(3, rep),
-                    tc.f_binary(4, f.name),
-                    tc.f_i32(5, 1),
-                    tc.f_i32(6, _CONV_LIST),
-                    tc.f_struct(10, _logical(3)),  # LIST
-                )
-            )
-            elems.append(tc.struct(tc.f_i32(3, _REPEATED), tc.f_binary(4, "list"), tc.f_i32(5, 1)))
-            walk(t.value_field.with_name("element"), path + [f.name, "list"])
-            return
-        if int96_timestamps and pa.types.is_timestamp(t):
-            # legacy INT96 mode: bare physical type, no logical annotation
-            code, conv, logical = _T_INT96, None, None
-        else:
-            code, conv, logical = _leaf_type_info(t)
-        is_dec = pa.types.is_decimal(t)
-        if is_dec:
-            from cpp_parquet_spark.kernels.plain import decimal_type_length
 
-            flba_len = decimal_type_length(t.precision)
-        elif pa.types.is_fixed_size_binary(t):
-            flba_len = t.byte_width
-        else:
-            flba_len = None
-        elems.append(
-            tc.struct(
-                tc.f_i32(1, code),
-                tc.f_i32(2, flba_len) if flba_len is not None else None,
-                tc.f_i32(3, rep),
-                tc.f_binary(4, f.name),
-                tc.f_i32(6, conv) if conv is not None else None,
-                tc.f_i32(7, t.scale) if is_dec else None,
-                tc.f_i32(8, t.precision) if is_dec else None,
-                tc.f_struct(10, logical) if logical is not None else None,
-            )
+def _schema_element(node: SchemaNode, int96_timestamps: bool) -> bytes:
+    """Thrift SchemaElement of one schema_plan node."""
+    rep = tc.f_i32(3, _REPETITION[node.repetition])
+    name = tc.f_binary(4, node.name)
+    if node.leaf is None:
+        conv, logical = _GROUP_ANNOTATION.get(node.annotation, (None, None))
+        return tc.struct(
+            rep,
+            name,
+            tc.f_i32(5, node.num_children),
+            tc.f_i32(6, conv) if conv is not None else None,
+            tc.f_struct(10, _logical(logical)) if logical is not None else None,
         )
-        leaf_paths.append(path + [f.name])
-
-    for f in schema:
-        walk(f, [])
-    return elems, leaf_paths
+    t = node.leaf.arrow_type
+    physical = _leaf_type(node.leaf, int96_timestamps)
+    # legacy INT96 mode: bare physical type, no logical annotation
+    conv, logical = (None, None) if physical == "INT96" else _leaf_annotation(t)
+    is_dec = pa.types.is_decimal(t)
+    return tc.struct(
+        tc.f_i32(1, _PHYS_CODE[physical]),
+        tc.f_i32(2, node.type_length) if node.type_length is not None else None,
+        rep,
+        name,
+        tc.f_i32(6, conv) if conv is not None else None,
+        tc.f_i32(7, t.scale) if is_dec else None,
+        tc.f_i32(8, t.precision) if is_dec else None,
+        tc.f_struct(10, logical) if logical is not None else None,
+    )
 
 
 _JULIAN_UNIX_EPOCH = 2440588
@@ -397,85 +333,37 @@ def _split_pages(sh: ShreddedColumn, plan: ColumnPlan, max_records: int) -> list
     return out
 
 
-def _stat_bytes(scalar, t: pa.DataType) -> bytes | None:
-    """Plain-encoded min/max value for Statistics (physical-type bytes)."""
-    v = scalar.as_py()
-    if v is None:
-        return None
-    if pa.types.is_date32(t):
-        v = (scalar.cast(pa.int32())).as_py()
-        return int(v).to_bytes(4, "little", signed=True)
-    if pa.types.is_timestamp(t):
-        return int(scalar.cast(pa.int64()).as_py()).to_bytes(8, "little", signed=True)
-    if pa.types.is_integer(t):
-        # width follows the PHYSICAL type (uint32 is stored as INT64);
-        # unsigned values use the raw two's-complement bit pattern, the
-        # same bytes the data pages carry (uint64 >= 2**63 must not
-        # overflow a signed to_bytes)
-        width = 8 if t.bit_width == 64 else 4
-        signed = not pa.types.is_unsigned_integer(t)
-        return int(v).to_bytes(width, "little", signed=signed)
-    if pa.types.is_float32(t):
-        return np.float32(v).tobytes()
-    if pa.types.is_float64(t):
-        return np.float64(v).tobytes()
-    if pa.types.is_string(t) or pa.types.is_large_string(t):
-        b = v.encode("utf-8")
-        return b if len(b) <= _MAX_STAT_BYTES else None
-    if pa.types.is_binary(t) or pa.types.is_large_binary(t) or pa.types.is_fixed_size_binary(t):
-        return v if len(v) <= _MAX_STAT_BYTES else None
-    if pa.types.is_decimal(t):
-        import decimal as _dec
-
-        from cpp_parquet_spark.kernels.plain import decimal_type_length
-
-        unscaled = int(_dec.Decimal(v).scaleb(t.scale))
-        return unscaled.to_bytes(decimal_type_length(t.precision), "big", signed=True)
-    return None
-
-
-def _statistics(sh: ShreddedColumn, plan: ColumnPlan) -> bytes | None:
-    """Thrift Statistics (null_count + min_value/max_value) so readers
-    can prune row groups — the reference writes none; this is part of
-    making the output a first-class scan source at scale."""
+def _statistics(sh: ShreddedColumn, physical: str) -> bytes:
+    """Thrift Statistics of one column chunk so readers can prune row
+    groups (the reference writes none): null_count, plus min/max as the
+    PLAIN bytes of the values (``encode_plain_parquet``, without the u32
+    length prefix for BYTE_ARRAY).  Min/max are left out for BOOLEAN,
+    for chunks holding a NaN (it breaks the ordering) and past
+    ``_MAX_STAT_BYTES``; INT96 chunks get no Statistics at all."""
     import pyarrow.compute as pc
 
-    null_count = sh.num_entries - len(sh.values)
-    head: list = []
-    fields = [tc.f_i64(3, null_count)]
-    t = sh.values.type
-    ok_type = (
-        pa.types.is_integer(t)
-        or pa.types.is_floating(t)
-        or pa.types.is_string(t)
-        or pa.types.is_large_string(t)
-        or pa.types.is_binary(t)
-        or pa.types.is_large_binary(t)
-        or pa.types.is_fixed_size_binary(t)
-        or pa.types.is_decimal(t)
-        or pa.types.is_date32(t)
-        or pa.types.is_timestamp(t)
-    )
-    if ok_type and len(sh.values):
-        if pa.types.is_floating(t) and pc.any(pc.is_nan(sh.values)).as_py():
-            return tc.struct(*fields)  # NaN breaks min/max ordering: omit
-        try:
-            mm = pc.min_max(sh.values)
-        except pa.lib.ArrowNotImplementedError:  # e.g. FLBA on older Arrow
-            return tc.struct(*fields)
-        mn, mx = _stat_bytes(mm["min"], t), _stat_bytes(mm["max"], t)
-        if mn is not None and mx is not None:
-            # both the modern (5/6) and deprecated (1/2) field pairs:
-            # Arrow C++ distrusts 5/6 from writers it cannot version-parse
-            # but accepts 1/2 (what DuckDB emits); DuckDB reads either.
-            # The deprecated pair implies SIGNED sort order, which is
-            # wrong for unsigned logical types — omit it there.
-            if not pa.types.is_unsigned_integer(t):
-                head.append(tc.f_binary(1, mx))  # max (deprecated)
-                head.append(tc.f_binary(2, mn))  # min (deprecated)
-            fields.append(tc.f_binary(5, mx))  # max_value
-            fields.append(tc.f_binary(6, mn))  # min_value
-    return tc.struct(*head, *fields)
+    fields = [tc.f_i64(3, sh.num_entries - len(sh.values))]
+    v = sh.values
+    if physical == "BOOLEAN" or not len(v):
+        return tc.struct(*fields)
+    if physical in ("FLOAT", "DOUBLE") and pc.any(pc.is_nan(v)).as_py():
+        return tc.struct(*fields)
+    mm = pc.min_max(v)
+    buf = encode_plain_parquet(pa.array([mm["min"], mm["max"]]), physical)
+    if physical == "BYTE_ARRAY":
+        n = int.from_bytes(buf[:4], "little")
+        mn, mx = buf[4 : 4 + n], buf[8 + n :]
+    else:
+        mn, mx = buf[: len(buf) // 2], buf[len(buf) // 2 :]
+    if max(len(mn), len(mx)) > _MAX_STAT_BYTES:
+        return tc.struct(*fields)
+    # both the modern (5/6) and deprecated (1/2) field pairs: Arrow C++
+    # distrusts 5/6 from writers it cannot version-parse but accepts 1/2
+    # (what DuckDB emits); DuckDB reads either.  The deprecated pair
+    # implies SIGNED sort order, which is wrong for unsigned logical
+    # types — omit it there.
+    head = [] if pa.types.is_unsigned_integer(v.type) else [tc.f_binary(1, mx), tc.f_binary(2, mn)]
+    return tc.struct(*head, *fields, tc.f_binary(5, mx), tc.f_binary(6, mn))
 
 
 class ParquetWriter:
@@ -505,7 +393,6 @@ class ParquetWriter:
         self.data_page_version = data_page_version
         self.path = path
         self.schema = schema
-        self.int96 = int96_timestamps
         self.use_dictionary = use_dictionary
         # DELTA_LENGTH_BYTE_ARRAY for non-dictionary string/binary
         # chunks: packed lengths + contiguous payload instead of
@@ -514,9 +401,11 @@ class ParquetWriter:
         self.use_delta = use_delta
         self.gzip = compression == "gzip"
         self.page_records = page_records
-        self.plans = plan_from_schema(schema)
-        self._elems, self._leaf_paths = _schema_elements(schema, int96_timestamps)
-        assert len(self._leaf_paths) == len(self.plans)
+        nodes = parquet_schema(schema)
+        root = tc.struct(tc.f_binary(4, "schema"), tc.f_i32(5, len(schema)))
+        self._elems = [root] + [_schema_element(n, int96_timestamps) for n in nodes]
+        # (plan, path_in_schema, physical type written) per leaf
+        self._leaves = [(n.leaf, n.path, _leaf_type(n.leaf, int96_timestamps)) for n in nodes if n.leaf is not None]
         self._row_groups: list[bytes] = []
         self._num_rows = 0
         self._f = open(path, "wb")
@@ -529,15 +418,15 @@ class ParquetWriter:
             return
         chunks: list[bytes] = []
         total = 0
-        for plan, fpath in zip(self.plans, self._leaf_paths):
+        for plan, fpath, physical in self._leaves:
             col = table.column(plan.path[0])
             arr = col.combine_chunks() if isinstance(col, pa.ChunkedArray) else col
             sh = shred(arr, plan)
-            use_int96 = self.int96 and pa.types.is_timestamp(plan.arrow_type)
+            use_int96 = physical == "INT96"
             vt = sh.values.type
             if pa.types.is_timestamp(vt) and not use_int96 and vt.unit == "s":
                 # Parquet has no SECONDS TimeUnit; the footer declares
-                # MICROS for 's' columns (_leaf_type_info), so the values
+                # MICROS for 's' columns (_leaf_annotation), so the values
                 # must be scaled to match — an exact cast.  ms/us/ns are
                 # written raw with their own declared unit.
                 sh = ShreddedColumn(
@@ -580,9 +469,9 @@ class ParquetWriter:
                 raw_len += raw
             self._pos += chunk_len
             total += chunk_len
-            stats = None if use_int96 else _statistics(sh, plan)
+            stats = None if use_int96 else _statistics(sh, physical)
             cmd = tc.struct(
-                tc.f_i32(1, _T_INT96 if use_int96 else _PHYS_CODE[plan.physical]),
+                tc.f_i32(1, _PHYS_CODE[physical]),
                 tc.f_list(2, tc.T_I32, [tc.zigzag_varint(e) for e in encodings]),
                 tc.f_list(3, tc.T_BINARY, [tc.uvarint(len(p.encode())) + p.encode() for p in fpath]),
                 tc.f_i32(4, _CODEC_GZIP if self.gzip else _CODEC_UNCOMPRESSED),

@@ -9,7 +9,7 @@ grouper (``parquet_writer.bounded_groups``) at ``row_group_rows`` rows,
 inside a batch if need be, so executor memory is bounded by the
 row-group size regardless of partition size.  The one entry point,
 :func:`write_parquet_dir`, runs the write job and returns the manifest
-rows; the lazy-manifest ``write_dataset`` was folded into it.
+rows.
 ``spark.read.parquet`` (or DuckDB/pyarrow on the directory) is the
 independent-reader oracle, mirroring the reference's parquet-dump
 validation (parquet-file-test.cc:37-50).
@@ -53,7 +53,6 @@ def write_parquet_dir(
     directory: str,
     row_group_rows: int = DEFAULT_CHUNK_ROWS,
     compression: str | None = None,
-    use_dictionary: bool = True,
     data_page_version: int = 1,
 ) -> list:
     """Write ``df`` as a directory of real Parquet part files, one per
@@ -77,7 +76,6 @@ def write_parquet_dir(
                     tmp,
                     tbl.schema,
                     compression=compression,
-                    use_dictionary=use_dictionary,
                     data_page_version=data_page_version,
                 )
             writer.write_row_group(tbl)

@@ -9,6 +9,7 @@ output may vary by library version).
 """
 
 import datetime as dt
+import decimal
 import hashlib
 import itertools
 
@@ -45,6 +46,58 @@ def _table() -> pa.Table:
     )
 
 
+def _nested_table() -> pa.Table:
+    """Nested groups and every annotated leaf type: struct, map, list of
+    struct, list of list, decimals (at most 28 significant digits),
+    FLBA, unsigned ints, three timestamp flavours and dates; nullable
+    and required fields at the top level and inside the groups."""
+    i = range(_N)
+    ts0 = dt.datetime(2026, 1, 1)
+    ab = pa.struct([pa.field("a", pa.int32()), pa.field("b", pa.string(), nullable=False)])
+    point = pa.struct([pa.field("x", pa.int64()), pa.field("y", pa.string(), nullable=False)])
+    cols = [
+        (
+            pa.field("st", ab),
+            [None if k % 13 == 0 else {"a": None if k % 5 == 0 else k, "b": f"b{k % 17}"} for k in i],
+        ),
+        (
+            pa.field("m", pa.map_(pa.string(), pa.int32())),
+            [None if k % 10 == 0 else [(f"k{j}", k * j) for j in range(k % 3)] for k in i],
+        ),
+        (
+            pa.field("ls", pa.list_(point)),
+            [None if k % 8 == 0 else [{"x": k + j, "y": f"y{j}"} for j in range(k % 3)] for k in i],
+        ),
+        (
+            pa.field("ll", pa.list_(pa.list_(pa.field("element", pa.int32(), nullable=False))), nullable=False),
+            [[[k, j] for j in range(k % 3)] for k in i],
+        ),
+        (
+            pa.field("d12", pa.decimal128(12, 2)),
+            [None if k % 6 == 0 else decimal.Decimal(k * 1234567 - 600_000_000).scaleb(-2) for k in i],
+        ),
+        (
+            pa.field("d38", pa.decimal128(38, 10), nullable=False),
+            [decimal.Decimal(f"123456789012345678.{k:010d}") * (-1) ** k for k in i],
+        ),
+        (pa.field("fb", pa.binary(5)), [None if k % 4 == 0 else (k * 31).to_bytes(5, "big") for k in i]),
+        (pa.field("u32", pa.uint32(), nullable=False), [(k * 2654435761) % 2**32 for k in i]),
+        (pa.field("u64", pa.uint64()), [None if k % 9 == 0 else 2**63 + k * 977 for k in i]),
+        (
+            pa.field("ts_ms", pa.timestamp("ms"), nullable=False),
+            [ts0 + dt.timedelta(milliseconds=1_003 * k) for k in i],
+        ),
+        (pa.field("ts_ns", pa.timestamp("ns")), [1_767_225_600_000_000_000 + 7 * k for k in i]),
+        (
+            pa.field("ts_utc", pa.timestamp("us", "UTC")),
+            [None if k % 3 == 0 else ts0 + dt.timedelta(seconds=k) for k in i],
+        ),
+        (pa.field("dt", pa.date32(), nullable=False), [dt.date(2020, 1, 1) + dt.timedelta(days=k) for k in i]),
+    ]
+    schema = pa.schema([f for f, _ in cols])
+    return pa.Table.from_arrays([pa.array(v, f.type) for f, v in cols], schema=schema)
+
+
 _WRITE_DIGESTS = {
     # (data_page_version, use_dictionary, use_delta) -> sha256 of the file
     (1, True, True): "f66025831b9b5962c953b70c0e53e731cdf2057e9754b5f2a37696f80024ed7f",
@@ -55,6 +108,13 @@ _WRITE_DIGESTS = {
     (2, True, False): "f8ce57aee0d937db2fcc63102c97a697e1937e0c9b8cc5e60cb7d3f680e2af8f",
     (2, False, True): "b5db2c81ed687b2aec5addbd742bc5a1cd7f5c447c85079cbb7169b9e1039e77",
     (2, False, False): "0315c3a732360cc31cb0c418fcd570fe8834b69000c272b7affe8e2b79d5c4a5",
+}
+
+_NESTED_DIGESTS = {
+    # (data_page_version, int96_timestamps) -> sha256 of the file
+    (1, False): "1ba97063c85edc8bf25b2aee037ca931a1ace386a518f59aaae61af8bb498b49",
+    (2, False): "4504ef59a071f6f850c2a12d447763219032f262b525479ed29e67538fa8f24c",
+    (1, True): "108eade53cb6f17b209f81a989db9056133fd950d3ef4a7bd169a4eb276e89ab",
 }
 
 _CHUNK_DIGESTS = {
@@ -87,6 +147,14 @@ def test_write_table_bytes_pinned(version, use_dict, use_delta, tmp_path):
     )
     digest = hashlib.sha256(path.read_bytes()).hexdigest()
     assert digest == _WRITE_DIGESTS[(version, use_dict, use_delta)]
+
+
+@pytest.mark.parametrize("version,int96", list(_NESTED_DIGESTS))
+def test_write_table_nested_bytes_pinned(version, int96, tmp_path):
+    path = tmp_path / "t.parquet"
+    write_table(_nested_table(), str(path), page_records=300, data_page_version=version, int96_timestamps=int96)
+    digest = hashlib.sha256(path.read_bytes()).hexdigest()
+    assert digest == _NESTED_DIGESTS[(version, int96)]
 
 
 @pytest.mark.parametrize("codec", list(_CHUNK_DIGESTS))

@@ -512,3 +512,22 @@ def test_data_page_v1_vs_v2_equivalent(tmp_path):
     assert _first_data_page_type_byte(p1) == 0x00
     assert _first_data_page_type_byte(p2) == 0x06
     assert pq.read_table(p1).equals(pq.read_table(p2))
+
+
+def test_decimal38_statistics_are_exact(tmp_path):
+    """decimal(38,10) min/max keep all 29 significant digits: a
+    statistic rounded to 28 digits excludes the true minimum, and
+    readers that prune on it (pyarrow ``filters=``, DuckDB) return no
+    rows for ``d = min``."""
+    import decimal
+
+    lo = decimal.Decimal("1234567890123456789.0123456786")
+    hi = decimal.Decimal("1234567890123456789.0123456787")
+    t = pa.table({"d": pa.array([hi, lo], pa.decimal128(38, 10))})
+    path = str(tmp_path / "d38.parquet")
+    write_table(t, path)
+    st = pq.ParquetFile(path).metadata.row_group(0).column(0).statistics
+    assert (st.min, st.max) == (lo, hi)
+    assert pq.read_table(path, filters=[("d", "=", lo)]).column("d").to_pylist() == [lo]
+    got = duckdb.sql(f"select d from '{path}' where d = {lo}::DECIMAL(38,10)").fetchall()
+    assert got == [(lo,)]
