@@ -27,15 +27,20 @@ from cpp_parquet_spark.kernels.forpack import decode_delta, decode_for, encode_d
 from cpp_parquet_spark.kernels.fsst import decode_fsst, encode_fsst
 from cpp_parquet_spark.kernels.levels import ShreddedColumn, framed_levels, unshred
 from cpp_parquet_spark.kernels.lined import decode_lined, encode_lined
-from cpp_parquet_spark.kernels.plain import decode_plain, encode_plain, fixed_np, plain_size
+from cpp_parquet_spark.kernels.plain import (
+    decode_plain, encode_plain, from_int_view, int_view, parse_view, plain_size,
+)
 from cpp_parquet_spark.kernels.rle_runs import decode_rle_runs, encode_rle_runs
 from cpp_parquet_spark.schema_plan import ColumnPlan
 
-# SGC2: the PLAIN BYTE_ARRAY section changed layout in round 2
-# (interleaved u32 prefixes -> FOR lengths block + contiguous payload).
-# EncodeJob supports cross-run resume, so chunk stores persisted by the
-# old layout must be rejected loudly, not misdecoded — hence the bump.
-MAGIC = b"SGC2"
+# The magic changes with every payload layout change.  EncodeJob
+# supports cross-run resume, so a store persisted by another layout must
+# be rejected loudly, not misdecoded.  SGC2: PLAIN BYTE_ARRAY became a
+# FOR lengths block + contiguous payload.  SGC3: the ``for``/``delta``
+# payloads start with the scaled-integer view header
+# (kernels/plain.int_view) and take decimals and doubles; an SGC2 reader
+# would decode a decimal's unscaled ints as values 10^scale too large.
+MAGIC = b"SGC3"
 
 CODECS = ("plain", "dict", "rle", "fsst", "for", "lined", "delta", "alpha", "boolpack")
 _CODEC_ID = {name: i for i, name in enumerate(CODECS)}
@@ -67,8 +72,8 @@ def _encode_values(values: pa.Array, codec: str, physical: str) -> bytes:
         # real Parquet's PLAIN boolean layout
         return np.packbits(np.asarray(values, dtype=bool), bitorder="little").tobytes()
     if codec in ("for", "delta"):
-        ints = fixed_np(values)
-        return encode_for(ints) if codec == "for" else encode_delta(ints)
+        view, ints = int_view(values, physical)
+        return view.header() + (encode_for(ints) if codec == "for" else encode_delta(ints))
     raise ValueError(f"unknown codec {codec}")
 
 
@@ -85,11 +90,9 @@ def _decode_values(buf: bytes, n: int, codec: str, physical: str, arrow_type: pa
         bits = np.unpackbits(np.frombuffer(buf, dtype=np.uint8), count=n, bitorder="little")
         return pa.array(bits.astype(bool), type=arrow_type)
     if codec in ("for", "delta"):
-        arr = decode_for(buf, n) if codec == "for" else decode_delta(buf, n)
-        out = pa.array(arr)
-        if pa.types.is_date(arrow_type):  # no int64->date32 cast in pyarrow 16
-            return out.cast(pa.int32()).cast(arrow_type)
-        return out.cast(arrow_type)
+        view, pos = parse_view(buf)
+        ints = decode_for(buf[pos:], n) if codec == "for" else decode_delta(buf[pos:], n)
+        return from_int_view(view, ints, physical, arrow_type)
     raise ValueError(f"unknown codec {codec}")
 
 
@@ -137,9 +140,11 @@ def deserialize_chunk(buf: bytes, plan: ColumnPlan) -> ShreddedColumn:
         if bytes(mv[0:3]) == MAGIC[:3]:  # an SGC chunk from another layout version
             raise ValueError(
                 f"chunk format {bytes(mv[0:4])!r} does not match this build's {MAGIC!r}; "
-                "re-encode the store (the PLAIN BYTE_ARRAY layout changed)"
+                "re-encode the store with this build"
             )
         raise ValueError("bad chunk magic")
+    if mv[5] >= len(CODECS):
+        raise ValueError(f"unknown codec id {mv[5]} in chunk header byte 5")
     codec = CODECS[mv[5]]
     pos = 8
     num_entries = int.from_bytes(mv[pos : pos + 4], "little")

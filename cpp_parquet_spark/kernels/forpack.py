@@ -10,6 +10,10 @@ sit on that one step:
   Layout: i64 min (LE) | u8 width | packed bits.
 * ``delta``: the same frame over consecutive differences.
   Layout: i64 first (LE) | ``for`` blob of the n-1 diffs.
+  As chunk codecs both pack the scaled-integer view of the column
+  (``kernels/plain.int_view``: integers and temporals, decimal128 with
+  precision <= 18, decimal-valued DOUBLE chunks), and the chunk payload
+  is the view's 18-byte header followed by this layout.
 * Parquet DELTA_BINARY_PACKED (public spec Encodings.md): one frame per
   128-value block, one width per 32-value miniblock.
   Layout: <block size: ULEB128> <miniblocks per block: ULEB128>

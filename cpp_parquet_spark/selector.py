@@ -19,7 +19,7 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 
-from cpp_parquet_spark.kernels.plain import fixed_np, plain_size
+from cpp_parquet_spark.kernels.plain import int_view, plain_size
 from cpp_parquet_spark.kernels.rle_runs import run_count
 
 _SAMPLE_ROWS = 2048
@@ -43,9 +43,10 @@ class ColumnStats:
     runs: int
     avg_len: float  # BYTE_ARRAY only; 0 otherwise
     byte_entropy: float  # BYTE_ARRAY only (bits/byte on sample); 0 otherwise
-    int_range_bits: int  # integer types only; width of (max-min)
+    int_range_bits: int | None  # width of (max-min) over the scaled-integer
+    # view (kernels/plain.int_view); None where the column has none
     avg_newlines: float = 0.0  # BYTE_ARRAY only; newlines per value
-    sorted_prefix: bool = False  # integers only; contiguous prefix monotone
+    sorted_prefix: bool = False  # view only; contiguous prefix monotone
     distinct_bytes: int = 256  # BYTE_ARRAY only; alphabet size on sample
 
 
@@ -61,14 +62,14 @@ def _sample(values: pa.Array) -> pa.Array:
 def column_stats(values: pa.Array, physical: str) -> ColumnStats:
     n = len(values)
     if n == 0:
-        return ColumnStats(0, 0, 0, 0.0, 0.0, 0)
+        return ColumnStats(0, 0, 0, 0.0, 0.0, None)
     sample = _sample(values)
     card = pc.count_distinct(sample).as_py()
     # runs must be measured on a *contiguous* slice — a strided sample
     # destroys run structure
     runs = run_count(values.slice(0, min(n, _SAMPLE_ROWS)))
     avg_len = entropy = avg_nl = 0.0
-    range_bits = 0
+    range_bits = None
     distinct_bytes = 256
     if physical == "BYTE_ARRAY":
         lens = pc.binary_length(sample)
@@ -82,18 +83,25 @@ def column_stats(values: pa.Array, physical: str) -> ColumnStats:
             entropy = float(-(p * np.log2(p)).sum())
             avg_nl = float(hist[10] / len(raw) * avg_len)
             distinct_bytes = int((hist > 0).sum())
-        return ColumnStats(n, card, runs, avg_len, entropy, 0, avg_nl, False, distinct_bytes)
+        return ColumnStats(n, card, runs, avg_len, entropy, None, avg_nl, False, distinct_bytes)
     sorted_prefix = False
-    if physical in ("INT32", "INT64"):
-        t = fixed_np(sample)
+    try:
+        _, t = int_view(sample, physical)
+        _, pv = int_view(values.slice(0, min(n, _SAMPLE_ROWS)), physical)
+    except ValueError:
+        pass
+    else:
         range_bits = (int(t.max()) - int(t.min())).bit_length()
-        pv = fixed_np(values.slice(0, min(n, _SAMPLE_ROWS)))
         sorted_prefix = bool(len(pv) > 2 and (np.diff(pv) >= 0).all())
     return ColumnStats(n, card, runs, avg_len, entropy, range_bits, avg_nl, sorted_prefix)
 
 
 def shortlist(stats: ColumnStats, physical: str) -> list[str]:
-    """Rule-based candidate codecs, cheapest-to-try first."""
+    """Rule-based candidate codecs, cheapest-to-try first.  ``for`` and
+    ``delta`` (the latter on a sorted prefix) go to every column with a
+    scaled-integer view: integers, dates and timestamps, DOUBLE chunks
+    that are decimal at some 10^e, and decimal128 with precision <= 18
+    (FIXED_LEN_BYTE_ARRAY)."""
     if stats.n == 0:
         return ["plain"]
     s = stats
@@ -130,23 +138,24 @@ def shortlist(stats: ColumnStats, physical: str) -> list[str]:
         if 8 <= s.avg_len <= 4096 and payload_est <= 32e6 and not low_card and s.byte_entropy < 7.0:
             cands.append("fsst")
         cands.append("plain")
-    elif physical in ("INT32", "INT64"):
+    elif physical in ("INT32", "INT64", "DOUBLE", "FIXED_LEN_BYTE_ARRAY"):
         if runny:
             cands.append("rle")
         if low_card:
             cands.append("dict")
-        if s.sorted_prefix:
-            cands.append("delta")
-        type_bits = 32 if physical == "INT32" else 64
-        if s.int_range_bits < type_bits - 8:
-            cands.append("for")
+        if s.int_range_bits is not None:
+            if s.sorted_prefix:
+                cands.append("delta")
+            type_bits = {"INT32": 32, "FIXED_LEN_BYTE_ARRAY": 128}.get(physical, 64)
+            if s.int_range_bits < type_bits - 8:
+                cands.append("for")
         cands.append("plain")
     elif physical == "BOOLEAN":
         if runny:
             cands.append("rle")
         cands.append("boolpack")  # 8x vs the byte-per-value baseline, always
         cands.append("plain")
-    else:  # FLOAT/DOUBLE
+    else:  # FLOAT
         if runny:
             cands.append("rle")
         if low_card:
@@ -175,9 +184,10 @@ def select_codec(values: pa.Array, physical: str) -> str:
     n_trial = min(_SAMPLE_ROWS, max(256, int(2_000_000 / max(stats.avg_len, 1.0))))
     if n > 2 * n_trial:
         half = n_trial // 2
-        sample = pa.concat_arrays([values.slice(0, half), values.slice(n // 2, half)])
+        parts = [values.slice(0, half), values.slice(n // 2, half)]
     else:
-        sample = values.slice(0, min(n, n_trial))
+        parts = [values.slice(0, min(n, n_trial))]
+    sample = pa.concat_arrays(parts) if len(parts) > 1 else parts[0]
     base = plain_size(sample, physical)
     best, best_size = "plain", base
     for c in cands:
@@ -187,7 +197,13 @@ def select_codec(values: pa.Array, physical: str) -> str:
             continue  # a cheap codec already halved the data; skip the
             # expensive fsst trial — it rarely beats a 2x-winning lined/dict
         try:
-            sz = len(_encode_values(sample, c, physical))
+            if c == "delta":
+                # the jump across the seam of the two slices is no
+                # difference of the chunk, and one outlier widens every
+                # packed difference: trial each slice on its own
+                sz = sum(len(_encode_values(p, c, physical)) for p in parts)
+            else:
+                sz = len(_encode_values(sample, c, physical))
         except CODEC_ERRORS:
             continue
         if sz < best_size and sz < base * MARGIN.get(c, 1.0):

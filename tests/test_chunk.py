@@ -156,3 +156,47 @@ def test_selector_real_columns():
     n_chars = t.column("n_chars").combine_chunks()
     assert select_codec(n_chars, "INT64") in ("for", "dict", "plain")
 
+
+
+def _int_chunk():
+    field = pa.field("n", pa.int64(), nullable=False)
+    blob, _ = _chunk_rt(field, list(range(100000, 101000)), "for")
+    return bytearray(blob), plan_from_schema(pa.schema([field]))[0]
+
+
+def test_older_chunk_format_asks_for_reencode():
+    blob, plan = _int_chunk()
+    blob[:4] = b"SGC2"
+    with pytest.raises(ValueError, match="does not match this build's b'SGC3'; re-encode the store"):
+        deserialize_chunk(bytes(blob), plan)
+
+
+def test_foreign_magic_is_rejected():
+    blob, plan = _int_chunk()
+    blob[:4] = b"PAR1"
+    with pytest.raises(ValueError, match="bad chunk magic"):
+        deserialize_chunk(bytes(blob), plan)
+
+
+def test_unknown_codec_id_is_rejected():
+    blob, plan = _int_chunk()
+    blob[5] = 200
+    with pytest.raises(ValueError, match="unknown codec id 200"):
+        deserialize_chunk(bytes(blob), plan)
+
+
+def test_unknown_view_kind_is_rejected():
+    blob, plan = _int_chunk()
+    # REQUIRED flat column: 16-byte header, no level sections, then the
+    # data section's u32 length and the view header's kind byte
+    assert blob[20] == 0
+    blob[20] = 7
+    with pytest.raises(ValueError, match="unknown integer view kind 7"):
+        deserialize_chunk(bytes(blob), plan)
+
+
+def test_view_kind_must_fit_the_column():
+    blob, _ = _int_chunk()
+    plan = plan_from_schema(pa.schema([pa.field("n", pa.float64(), nullable=False)]))[0]
+    with pytest.raises(ValueError, match="does not fit a double column"):
+        deserialize_chunk(bytes(blob), plan)

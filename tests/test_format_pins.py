@@ -3,7 +3,9 @@
 A fixed table goes through ``write_table`` (every page/encoding switch)
 and through ``serialize_chunk`` (every integer, generic and string SGC
 codec); the sha256 of each output is compared with digests recorded
-from a known-good build.  Refactors of the encoders must keep these
+from a known-good build.  Chunk digests cover the bytes after the magic,
+which is pinned on its own, so a magic bump leaves the payload pins of
+unchanged codecs standing.  Refactors of the encoders must keep these
 digests: a change here is a format change.  Uncompressed only (zlib
 output may vary by library version).
 """
@@ -16,8 +18,9 @@ import itertools
 import pyarrow as pa
 import pytest
 
-from cpp_parquet_spark.chunk import serialize_chunk
+from cpp_parquet_spark.chunk import MAGIC, serialize_chunk
 from cpp_parquet_spark.kernels.levels import shred
+from cpp_parquet_spark.kernels.plain import int_view
 from cpp_parquet_spark.parquet_writer import write_table
 from cpp_parquet_spark.schema_plan import plan_from_schema
 
@@ -118,16 +121,20 @@ _NESTED_DIGESTS = {
 }
 
 _CHUNK_DIGESTS = {
-    # codec -> sha256 over every applicable column's payload, in schema order
-    "plain": "b8624a7ad92382bb61430ce16e7084d9444d0086e000dc8689fa7ca0c1fa4223",
-    "for": "f1c68c7dcea8345e11a0352ac49d2a38910c579f7dfe5ef9bf41b39f26c29587",
-    "delta": "2f6c80b5c5c59b5e074ceb38ac693b37b07ce3e18eeb5b6f87fb91d7a7c55f21",
-    "dict": "75304ef3897998f90e80d9a588646fafe7d1b019f3385560d6b3853ec2a9783d",
-    "rle": "ae9fff6c12b92d216a482bc8c95f8e0eaad9e35be6efb318d3cbfed2baab0230",
-    "lined": "04548d1131de947ba1d0f6e041353d3dbc132cbe3ab88a0d0a2e2bee9eea9249",
-    "alpha": "d6a2da483079bb1993c737bcf6bdd6763112e162cd96a083b82819f2e6efb2ea",
-    "fsst": "4e4c50986e17486a5fa700f8f9f071830499b7ae39ce9a583f7ef2ab7401becc",
+    # codec -> sha256 over every applicable column's chunk after the magic,
+    # in schema order
+    "plain": "934706013d37a9dc218b378e4726302cb402cbd7f0670993a743fa1937d7efc5",
+    "for": "61289237dda637e0a0268f5d7976979fabd43d3d4d544409572f2c356b28b72a",
+    "delta": "d04a2946d5001a81a1f53120633ed7a287fa5bea6deb9b23d7f05734ba8da52c",
+    "dict": "de91aecffd947a659335bdab008f0ef2e9c694330526a5c6694987375c19c189",
+    "rle": "56c48297bb4fa8a506cdc88972b9acd0b679695a555a7b10700f2a264d269540",
+    "lined": "f5eca16ef520538515b3b9aea33d0c5799b4f2d0f6e7386aef2e0bbaf5e38e9d",
+    "alpha": "b7f9e3249802814e212239bda78ed7ac36fdfe790a839430f959b4d46e0b58d6",
+    "fsst": "9d18a29c8d3aee7d95250a9008ba520c3cc9b3e94057feb389937ac94cf17af7",
 }
+
+# sha256 of the `for` chunks of _view_table, after the magic
+_VIEW_DIGEST = "b9bc4c057bd735a0dd284aa63d8cd59df5271dad4567ad44dd1156a0ec22e41a"
 
 _STRING_ONLY = ("lined", "alpha", "fsst")
 
@@ -168,5 +175,40 @@ def test_serialize_chunk_bytes_pinned(codec):
             continue
         sh = shred(t.column(plan.path[0]).combine_chunks(), plan)
         blob, _ = serialize_chunk(sh, codec)
-        h.update(blob)
+        h.update(blob[4:])  # the payload after the magic
     assert h.hexdigest() == _CHUNK_DIGESTS[codec]
+
+
+def test_chunk_magic():
+    assert MAGIC == b"SGC3"
+
+
+def _view_table() -> pa.Table:
+    """One column per scaled-integer view that is not a plain integer:
+    a decimal(12,2) with nulls, a double exact at 10^2 (in steps of 1.37) and timestamps
+    at midnight (steps of one day)."""
+    i = range(_N)
+    day0 = dt.datetime(2024, 1, 1)
+    return pa.table(
+        {
+            "price": pa.array(
+                [None if k % 9 == 0 else decimal.Decimal(k * 7919 % 100_003 - 5_000).scaleb(-2) for k in i],
+                pa.decimal128(12, 2),
+            ),
+            "amount": pa.array([round(k * 1.37 - 300, 2) for k in i], pa.float64()),
+            "shipped": pa.array([day0 + dt.timedelta(days=k * 37 % 2_500) for k in i], pa.timestamp("us")),
+        }
+    )
+
+
+def test_serialize_chunk_view_bytes_pinned():
+    t = _view_table()
+    h = hashlib.sha256()
+    views = []
+    for plan in plan_from_schema(t.schema):
+        sh = shred(t.column(plan.path[0]).combine_chunks(), plan)
+        views.append(int_view(sh.values, plan.physical)[0])
+        blob, _ = serialize_chunk(sh, "for")
+        h.update(blob[4:])
+    assert [(v.kind, v.exponent, v.step) for v in views] == [(1, 0, 1), (2, 2, 137), (0, 0, 86_400_000_000)]
+    assert h.hexdigest() == _VIEW_DIGEST
